@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,55 +19,127 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    at(spark, snapshot(spark, sfDir, name))
+
+  /** One listing of table `name` under `sfDir`: its qualified root, the
+    * visible data files and a version derived from their
+    * `relPath:length:mtime` entries. Every staleness check keys on it —
+    * the relation memo, [[rowCount]], the text index and the derived
+    * frame stores ([[graft.plans.FrameStore]]) — and every registry and
+    * cache names the table by [[root]], so a bare path, a relative path
+    * and a `file:` URI name one table. A `synth:` table has one constant
+    * entry and no files. */
+  final class TableSnapshot private[Tables] (val sfDir: String, val name: String,
+      val root: String, visible: Seq[(String, FileStatus)]) {
+    private val byRel = visible.toMap
+    /** Relative paths of the visible data files, sorted. */
+    val files: Seq[String] = visible.map(_._1)
+    def entryOf(rel: String): String = {
+      val s = byRel(rel)
+      s"$rel:${s.getLen}:${s.getModificationTime}"
+    }
+    val entries: Seq[String] =
+      if (sfDir.startsWith("synth:")) Seq(s"$root:immutable") else files.map(entryOf)
+    val version: String = graft.plans.FrameStore.sha1Hex(entries.mkString("\n"))
+    def pathOf(rel: String): String = byRel(rel).getPath.toString
+    private[graft] def statuses: Seq[FileStatus] = visible.map(_._2)
+  }
+
+  /** The qualified root of table `name` under `sfDir`, without listing
+    * it. Qualification uses the active session's Hadoop configuration
+    * (its default file system), else a default one. */
+  def rootOf(sfDir: String, name: String): String =
+    qualify(s"$sfDir/$name.parquet")
+
+  private[graft] def qualify(path: String): String =
+    if (path.startsWith("synth:")) path
+    else {
+      val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .map(_.sparkContext.hadoopConfiguration)
+        .getOrElse(new org.apache.hadoop.conf.Configuration())
+      val p = new Path(path)
+      p.getFileSystem(conf).makeQualified(p).toString
+    }
+
+  /** The snapshot walk — the one place table files are listed. It never
+    * descends into a child whose name starts with '_' or '.' (sidecars
+    * such as `_SUCCESS` and `.crc`, and the `_temporary` tree of a
+    * commit in progress); names above the root are never judged. An
+    * entry that vanishes mid-walk (a committing writer's scratch files)
+    * is skipped, not fatal. */
+  def snapshot(spark: SparkSession, sfDir: String, name: String): TableSnapshot =
     sfDir match {
+      case SynthDir(_, _) =>
+        new TableSnapshot(sfDir, name, s"$sfDir/$name.parquet", Nil)
+      case _ =>
+        val path = new Path(s"$sfDir/$name.parquet")
+        val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+        val root = fs.makeQualified(path)
+        def walk(dir: Path, prefix: String): Iterator[(String, FileStatus)] = {
+          val children =
+            try fs.listStatus(dir)
+            catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+          children.iterator
+            .filterNot(s => s.getPath.getName.startsWith("_") ||
+              s.getPath.getName.startsWith("."))
+            .flatMap { s =>
+              val rel = prefix + s.getPath.getName
+              if (s.isDirectory) walk(s.getPath, rel + "/") else Iterator(rel -> s)
+            }
+        }
+        val st = fs.getFileStatus(root)
+        val visible =
+          if (st.isDirectory) walk(root, "").toSeq.sortBy(_._1)
+          else Seq(st.getPath.getName -> st)
+        new TableSnapshot(sfDir, name, root.toString, visible)
+    }
+
+  /** The table as of `snap`: a `synth:` table is generated; a parquet
+    * table comes from the resolved-relation memo.
+    *
+    * `spark.read.parquet(path)` pays DataSource resolution — file
+    * listing, parquet footer schema read, relation construction — on
+    * EVERY call, and the rule-time census priced that at ~78 ms/query
+    * across the suite (ResolveDataSource was 21.9 s of the 34.6 s total
+    * Catalyst time per bench sweep, r15). A catalog table resolves once
+    * and serves the cached relation; this memo is that catalog
+    * behaviour for the path-loaded driver tables. It caches the resolved
+    * DataFrame HANDLE (logical plan + schema + file index) — never rows
+    * or results; every action over it still scans parquet.
+    *
+    * Staleness: keyed by session (a DataFrame is session-bound) and the
+    * snapshot's root, and served only for the snapshot version it was
+    * resolved at, so a table rewritten in place re-resolves instead of
+    * serving a stale file index. */
+  def at(spark: SparkSession, snap: TableSnapshot): DataFrame =
+    snap.sfDir match {
       case SynthDir(n, p) =>
         val parts = Option(p).map(_.toInt)
           .getOrElse(spark.sparkContext.defaultParallelism)
-        synthTable(spark, name, n.toLong, parts)
-      case _ => resolved(spark, s"$sfDir/$name.parquet")
-    }
-
-  /** Resolved-relation memo: `spark.read.parquet(path)` pays DataSource
-    * resolution — file listing, parquet footer schema read, relation
-    * construction — on EVERY call, and the rule-time census priced that
-    * at ~78 ms/query across the suite (ResolveDataSource was 21.9 s of
-    * the 34.6 s total Catalyst time per bench sweep, r15). A catalog
-    * table resolves once and serves the cached relation; this memo is
-    * that catalog behaviour for the path-loaded driver tables. It
-    * caches the resolved DataFrame HANDLE (logical plan + schema +
-    * file index) — never rows or results; every action over it still
-    * scans parquet.
-    *
-    * Staleness: keyed by session (a DataFrame is session-bound) and
-    * validated against the same name:length:mtime listing fingerprint
-    * [[rowCount]] uses, so a table rewritten in place re-resolves
-    * instead of serving a stale file index. The fingerprint is one
-    * driver-side listStatus per call — microseconds against the
-    * ~50-100 ms resolution it replaces. */
-  private def resolved(spark: SparkSession, path: String): DataFrame = {
-    val fp = listingFingerprint(spark, path)
-    val perSession = relationCache.synchronized {
-      // cached DataFrames strongly reference their SparkSession, so the
-      // weak keying alone never collects stopped sessions (r15 advice);
-      // evict them explicitly while holding the monitor
-      val it = relationCache.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getKey.sparkContext.isStopped) it.remove()
-      var m = relationCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (Long, DataFrame)]
-        relationCache.put(spark, m)
-      }
-      m
-    }
-    perSession.get(path) match {
-      case Some((`fp`, df)) => df
+        synthTable(spark, snap.name, n.toLong, parts)
       case _ =>
-        val df = spark.read.parquet(path)
-        perSession.put(path, (fp, df))
-        df
+        val perSession = relationCache.synchronized {
+          // cached DataFrames strongly reference their SparkSession, so
+          // the weak keying alone never collects stopped sessions;
+          // evict them explicitly while holding the monitor
+          val it = relationCache.entrySet().iterator()
+          while (it.hasNext)
+            if (it.next().getKey.sparkContext.isStopped) it.remove()
+          var m = relationCache.get(spark)
+          if (m == null) {
+            m = scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)]
+            relationCache.put(spark, m)
+          }
+          m
+        }
+        perSession.get(snap.root) match {
+          case Some((v, df)) if v == snap.version => df
+          case _ =>
+            val df = spark.read.parquet(snap.root)
+            perSession.put(snap.root, (snap.version, df))
+            df
+        }
     }
-  }
 
   /** Weak-keyed by session: a stopped session's cached relations must
     * never be served to a new session (a DataFrame is bound to the
@@ -74,28 +147,7 @@ object Tables {
     * session in memory across a long test JVM. */
   private val relationCache = new java.util.WeakHashMap[
     SparkSession,
-    scala.collection.concurrent.TrieMap[String, (Long, DataFrame)]]
-
-  /** name:length:mtime fingerprint of the (possibly nested) file listing
-    * under `path` — the staleness key shared by [[resolved]] and
-    * [[rowCount]]. */
-  private def listingFingerprint(spark: SparkSession, path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    def dataFiles(p: org.apache.hadoop.fs.Path)
-        : Iterator[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).iterator
-        .filter(s => !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Iterator(s))
-    val files =
-      if (fs.getFileStatus(root).isDirectory) dataFiles(root).toSeq
-      else Seq(fs.getFileStatus(root))
-    files.iterator
-      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime).hashCode())
-      .foldLeft(files.size.toLong)((a, h) => a * 1000003L + h)
-  }
+    scala.collection.concurrent.TrieMap[String, (String, DataFrame)]]
 
   /** `sfDir = "synth:<nDocs>[:<partitions>]"` swaps the parquet corpus
     * for a SCAN-TIME synthetic twin — the scale-soak seam: corpus size
@@ -288,46 +340,26 @@ object Tables {
       case other => sys.error(s"synth: tables exist only for documents/embeddings, got $other")
     }
     case _ =>
-      val path = s"$sfDir/$name.parquet"
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      // recurse: a partitioned/nested layout (part dirs under the
-      // table root) must be counted, not silently skipped; '_' and '.'
-      // prefixes are both sidecar conventions (_SUCCESS, .crc) and
-      // neither is a data file
-      def dataFiles(p: org.apache.hadoop.fs.Path)
-          : Iterator[org.apache.hadoop.fs.FileStatus] =
-        fs.listStatus(p).iterator
-          .filter(s => !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Iterator(s))
-      val files =
-        if (fs.getFileStatus(root).isDirectory) dataFiles(root).toSeq
-        else Seq(fs.getFileStatus(root))
-      // validate on the listing fingerprint, keyed by path: a table
-      // rewritten in-session (new mtimes / sizes / file count) must
-      // re-read footers, not serve the stale sum — and the rewrite
-      // must EVICT the prior entry, not leave it beside the new one
-      // (fingerprint-embedding keys grow without bound across long
-      // soak sessions of repeated publishes)
-      val fp = files.iterator
-        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime).hashCode())
-        .foldLeft(files.size.toLong)((a, h) => a * 1000003L + h)
-      rowCountCache.get(path) match {
-        case Some((`fp`, n)) => n
+      // validated on the snapshot version, keyed by root: a table
+      // rewritten in-session must re-read footers, not serve the stale
+      // sum — and the rewrite replaces the prior entry instead of
+      // growing the cache across long sessions of repeated publishes
+      val snap = snapshot(spark, sfDir, name)
+      rowCountCache.get(snap.root) match {
+        case Some((v, n)) if v == snap.version => n
         case _ =>
-          val n = files.iterator.map { s =>
+          val conf = spark.sessionState.newHadoopConf()
+          val n = snap.statuses.iterator.map { s =>
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
               .fromStatus(s, conf)
             val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
             try r.getRecordCount finally r.close()
           }.sum
-          rowCountCache.put(path, (fp, n))
+          rowCountCache.put(snap.root, (snap.version, n))
           n
       }
   }
 
   private val rowCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
+    scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
 }

@@ -30,6 +30,15 @@ object ArticleOps {
   private def docs(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
 
+  /** (index dir, docs) for an index-backed search: the text index is
+    * refreshed and the docs relation resolves against the snapshot that
+    * refresh compared, so a search lists the table once. */
+  private def indexedDocs(spark: SparkSession, sfDir: String,
+                          stemmed: Boolean = false): (String, DataFrame) = {
+    val r = graft.plans.TextIndexCatalog.refresh(spark, sfDir, stemmed)
+    (r.dir, Tables.at(spark, r.snapshot))
+  }
+
   /** O13: cleanse — wrap the text in article markup, then strip tags +
     * trim (newsspider.py:48-49). Pure narrow projection; whole-stage
     * codegen'd end to end. */
@@ -343,13 +352,11 @@ object ArticleOps {
     * optimization. The Mongo shape exactly: `create_index` once
     * (api.py:22), then every `$text` search uses it transparently
     * (api.py:26). A plan spec asserts the index join fires. */
-  def searchIndexed(spark: SparkSession, sfDir: String, keyword: String = "spark"): DataFrame = {
-    graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    docs(spark, sfDir)
+  def searchIndexed(spark: SparkSession, sfDir: String, keyword: String = "spark"): DataFrame =
+    indexedDocs(spark, sfDir)._2
       .filter(array_contains(split(lower(col("text")), " "), keyword.toLowerCase))
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")
-  }
 
   /** Ranked search — the Mongo textScore analogue (api.py:26): multi-term
     * OR match scored by total term frequency (integer-exact, so the
@@ -358,13 +365,15 @@ object ArticleOps {
     * the documents; the token explode collapses map-side via partial
     * aggregation. */
   def searchRanked(spark: SparkSession, sfDir: String,
-                   keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
-    val hits = docs(spark, sfDir)
+                   keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
+    rankedOver(docs(spark, sfDir), keywords)
+
+  private def rankedOver(d: DataFrame, keywords: Seq[String]): DataFrame = {
+    val hits = d
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
       .filter(col("term").isin(keywords.map(_.toLowerCase): _*))
       .groupBy("doc_id").agg(count(lit(1)).as("score"))
-    docs(spark, sfDir)
-      .join(hits, "doc_id")
+    d.join(hits, "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("score"))
       .orderBy(col("score").desc, col("doc_id"))
   }
@@ -379,10 +388,8 @@ object ArticleOps {
     * Mongo's `$text` contract: indexes are storage, not syntax
     * (api.py:22,26). A plan spec asserts the Generate is gone. */
   def searchRankedAuto(spark: SparkSession, sfDir: String,
-                       keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
-    graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    searchRanked(spark, sfDir, keywords)
-  }
+                       keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
+    rankedOver(indexedDocs(spark, sfDir)._2, keywords)
 
   /** Mongo `$text` quoted-phrase search (api.py:26 accepts `"exact
     * phrase"` syntax): docs whose FILTERED token sequence contains the
@@ -400,13 +407,13 @@ object ArticleOps {
     val terms = phrase.toLowerCase.split(" ").filter(_.nonEmpty)
     require(terms.nonEmpty,
       "phrase search needs at least one non-space token")
-    val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
+    val (idxPath, d) = indexedDocs(spark, sfDir)
     val cand = spark.read.parquet(idxPath)
       .filter(col("term").isin(terms.distinct.toSeq: _*))
       .groupBy("doc_id").agg(countDistinct(col("term")).as("nt"))
       .filter(col("nt") === terms.distinct.length)
       .select("doc_id")
-    val toks = docs(spark, sfDir)
+    val toks = d
       .join(cand, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), posexplode(
         filter(split(lower(col("text")), " "), t => length(t) > 0)))
@@ -416,7 +423,7 @@ object ArticleOps {
       acc.join(toks.filter(col("term") === t)
         .select(col("doc_id"), (col("pos") - i).as("pos")), Seq("doc_id", "pos"))
     }.select("doc_id").distinct()
-    docs(spark, sfDir).join(hits, Seq("doc_id"), "left_semi")
+    d.join(hits, Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
   }
@@ -439,7 +446,7 @@ object ArticleOps {
     val terms = phrase.toLowerCase.split(" ").filter(_.nonEmpty)
     require(terms.nonEmpty,
       "phrase search needs at least one non-space token")
-    val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
+    val (idxPath, d) = indexedDocs(spark, sfDir)
     val post = spark.read.parquet(idxPath)
     def positionsOf(t: String, shift: Int) =
       post.filter(col("term") === t)
@@ -449,7 +456,7 @@ object ArticleOps {
       .foldLeft(positionsOf(terms(0), 0)) { case (acc, (t, i)) =>
         acc.join(positionsOf(t, i), Seq("doc_id", "pos"))
       }.select("doc_id").distinct()
-    docs(spark, sfDir).join(hits, Seq("doc_id"), "left_semi")
+    d.join(hits, Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
   }
@@ -471,13 +478,13 @@ object ArticleOps {
     * threshold, so the oracle is unchanged. */
   def searchFuzzy(spark: SparkSession, sfDir: String,
                   keyword: String = "soft", maxDist: Int = 1): DataFrame = {
-    val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
+    val (idxPath, d) = indexedDocs(spark, sfDir)
     val post = spark.read.parquet(idxPath)
     val cand = post.select("term").distinct()
       .filter(levenshtein(col("term"), lit(keyword.toLowerCase),
         maxDist) =!= -1)
     val hits = post.join(cand, "term").select("doc_id").distinct()
-    docs(spark, sfDir).join(hits, Seq("doc_id"), "left_semi")
+    d.join(hits, Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
   }
@@ -530,9 +537,12 @@ object ArticleOps {
     ).cast("long")
 
   def searchBm25(spark: SparkSession, sfDir: String,
-                 keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
+                 keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
+    bm25Over(docs(spark, sfDir), keywords)
+
+  private def bm25Over(d: DataFrame, keywords: Seq[String]): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
-    val toks = docs(spark, sfDir)
+    val toks = d
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
       .filter(length(col("term")) > 0)
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
@@ -548,8 +558,7 @@ object ArticleOps {
         bm25Part(col("tf"), col("df"), col("dl"),
           col("n_docs"), col("tot")).as("part"))
       .groupBy("doc_id").agg(sum(col("part")).as("score"))
-    docs(spark, sfDir)
-      .join(scores, "doc_id")
+    d.join(scores, "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("score"))
       .orderBy(col("score").desc, col("doc_id"))
   }
@@ -611,14 +620,14 @@ object ArticleOps {
                 keywords: Seq[String] = Seq("spark", "merge"),
                 mu: Long = 2000L): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
-    val toks = docs(spark, sfDir)
+    val d = docs(spark, sfDir)
+    val toks = d
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
       .filter(length(col("term")) > 0)
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val tf = toks.filter(col("term").isin(kws: _*))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    docs(spark, sfDir)
-      .join(qlmScores(tf, dl, mu), "doc_id")
+    d.join(qlmScores(tf, dl, mu), "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("score"))
       .orderBy(col("score").desc, col("doc_id"))
   }
@@ -633,13 +642,12 @@ object ArticleOps {
                        keywords: Seq[String] = Seq("spark", "merge"),
                        mu: Long = 2000L): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
-    val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
+    val (idxPath, d) = indexedDocs(spark, sfDir)
     val post = spark.read.parquet(idxPath)
     val dl = post.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val tf = post.filter(col("term").isin(kws: _*))
       .select("doc_id", "term", "tf")
-    docs(spark, sfDir)
-      .join(qlmScores(tf, dl, mu), "doc_id")
+    d.join(qlmScores(tf, dl, mu), "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("score"))
       .orderBy(col("score").desc, col("doc_id"))
   }
@@ -654,10 +662,8 @@ object ArticleOps {
     * `$text` scoring contract (api.py:22,26). Results are bitwise equal
     * to the scan form (same exact-integer inputs, same score tree). */
   def searchBm25Auto(spark: SparkSession, sfDir: String,
-                     keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
-    graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    searchBm25(spark, sfDir, keywords)
-  }
+                     keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
+    bm25Over(indexedDocs(spark, sfDir)._2, keywords)
 
   /** [[searchBm25]] served ENTIRELY from the postings index — the
     * "indexes are storage, not syntax" story for the full scoring path.
@@ -674,7 +680,7 @@ object ArticleOps {
   def searchBm25Indexed(spark: SparkSession, sfDir: String,
                         keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
-    val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
+    val (idxPath, d) = indexedDocs(spark, sfDir)
     val post = spark.read.parquet(idxPath)
     val dl = post.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
@@ -687,8 +693,7 @@ object ArticleOps {
         bm25Part(col("tf"), col("df"), col("dl"),
           col("n_docs"), col("tot")).as("part"))
       .groupBy("doc_id").agg(sum(col("part")).as("score"))
-    docs(spark, sfDir)
-      .join(scores, "doc_id")
+    d.join(scores, "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("score"))
       .orderBy(col("score").desc, col("doc_id"))
   }
@@ -740,14 +745,13 @@ object ArticleOps {
   def searchSnippetIndexed(spark: SparkSession, sfDir: String,
                            keyword: String = "merge"): DataFrame = {
     val kw = keyword.toLowerCase
-    val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
+    val (idxPath, d) = indexedDocs(spark, sfDir)
     val hits = spark.read.parquet(idxPath)
       .filter(col("term") === kw)
       .select(col("doc_id"),
         (element_at(col("positions"), 1) + 1).cast("long").as("p"))
     val w = TextOps.words(col("text"))
-    docs(spark, sfDir)
-      .join(hits, "doc_id")
+    d.join(hits, "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), w.as("w"), col("p"))
       .select(col("doc_id"), col("lang"), col("source"),
         col("p").as("hit_pos"),
@@ -778,8 +782,10 @@ object ArticleOps {
     * terms once and this becomes the usual index semi-join. */
   def searchStemmed(spark: SparkSession, sfDir: String,
                     keyword: String = "merges"): DataFrame =
-    docs(spark, sfDir)
-      .filter(array_contains(
+    stemmedOver(docs(spark, sfDir), keyword)
+
+  private def stemmedOver(d: DataFrame, keyword: String): DataFrame =
+    d.filter(array_contains(
         transform(graft.operators.TextOps.words(col("text")),
           t => graft.operators.TextOps.stemToken(t)),
         graft.operators.TextOps.stemToken(lit(keyword.toLowerCase))))
@@ -790,12 +796,12 @@ object ArticleOps {
     * documents (the scalable form of `searchKeyword` — touches only the
     * postings for the term instead of scanning every document). */
   def searchViaIndex(spark: SparkSession, sfDir: String, keyword: String = "merge"): DataFrame = {
-    val postings = docs(spark, sfDir)
+    val d = docs(spark, sfDir)
+    val postings = d
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
       .filter(col("term") === keyword.toLowerCase)
       .select("doc_id").distinct()
-    docs(spark, sfDir)
-      .join(postings, Seq("doc_id"), "left_semi")
+    d.join(postings, Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
   }
@@ -816,10 +822,8 @@ object ArticleOps {
     * postings, and the query text never mentions the index — Mongo's
     * `$text` contract, where indexes are storage, not syntax. */
   def searchStemmedAuto(spark: SparkSession, sfDir: String,
-                        keyword: String = "merges"): DataFrame = {
-    graft.plans.TextIndexCatalog.ensureStemmedIndex(spark, sfDir)
-    searchStemmed(spark, sfDir, keyword)
-  }
+                        keyword: String = "merges"): DataFrame =
+    stemmedOver(indexedDocs(spark, sfDir, stemmed = true)._2, keyword)
 
   /** [[searchStemmed]] on the PORTER stemmer — the documented
     * derivational option (VERDICT r5 #8) closing the Mongo `$text`
@@ -867,13 +871,12 @@ object ArticleOps {
 
   def searchStemmedIndexed(spark: SparkSession, sfDir: String,
                            keyword: String = "merges"): DataFrame = {
-    val idxDir = graft.plans.TextIndexCatalog.ensureStemmedIndex(spark, sfDir)
+    val (idxDir, d) = indexedDocs(spark, sfDir, stemmed = true)
     val probe = spark.read.parquet(idxDir)
       .filter(col("term") ===
         graft.operators.TextOps.stemToken(lit(keyword.toLowerCase)))
       .select("doc_id")
-    docs(spark, sfDir)
-      .join(probe, Seq("doc_id"), "left_semi")
+    d.join(probe, Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
   }

@@ -342,9 +342,7 @@ object DedupOps {
     * the other's data; the location was already SHA-1-keyed, the NAME
     * now matches). */
   private def publishedTableName(sfDir: String): String =
-    "dd_signatures_" + java.security.MessageDigest.getInstance("SHA-1")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(16)
+    "dd_signatures_" + graft.plans.FrameStore.sha1Hex(sfDir).take(16)
 
   private[graft] def purgePublishedStore(spark: SparkSession,
                                          sfDir: String): Unit = {
@@ -373,8 +371,7 @@ object DedupOps {
       val locStr = graft.plans.FrameStore.dirFor(s"dd-published#$sfDir#v1")
       val loc = new org.apache.hadoop.fs.Path(locStr)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      val entries =
-        graft.plans.FrameStore.sourceEntries(spark, sfDir, "documents")
+      val entries = graft.Tables.snapshot(spark, sfDir, "documents").entries
       val known = spark.catalog.tableExists(tbl)
       if (graft.plans.FrameStore.readManifest(fs, loc) == entries) {
         // manifest matches the corpus snapshot: the on-disk bucketed

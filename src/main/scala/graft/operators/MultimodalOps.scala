@@ -882,9 +882,6 @@ object MultimodalOps {
 
   // ────────────── perceptual tiers over REAL ON-DISK FILES ──────────────
 
-  private val mediaLocks =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Object]
-
   /** Resolved-relation memo for the landing-zone binaryFile reads —
     * the [[graft.Tables]] `resolved` discipline (r15, guide §7.3
     * driver-side work): `spark.read.format("binaryFile").load` pays a
@@ -944,42 +941,27 @@ object MultimodalOps {
     * corpus — blobs in an object store, one file per asset — and the
     * write is executor-side (`foreachPartition`: each task lands its
     * own partition's files; no driver collect). The directory is keyed
-    * by the SHA-1 of the corpus path (the FrameStore.dirFor idiom —
-    * String.hashCode's 32 bits could silently alias two corpora, r14
-    * verdict) and validated against the documents table's
-    * name:length:mtime source manifest on EVERY call (r14 advice: a
+    * by the SHA-1 of the corpus path ([[graft.plans.FrameStore.sha1Hex]])
+    * and validated against the documents table's snapshot entries
+    * (`_source_manifest`) on EVERY call (r14 advice: a
     * corpus rewritten in place with the same row count must rebuild,
     * not serve stale payload files). Completion order is files →
     * `_source_manifest` → `_COMPLETE`, so a partial directory from a
     * killed run always re-validates as stale and rebuilds. */
   private[graft] def mediaFileDir(spark: SparkSession, sfDir: String,
-                                  kind: String): String =
-    // per-key lock (the FrameStore discipline): unrelated zones must
-    // not serialize behind one monitor
-    mediaLocks.getOrElseUpdate((sfDir, kind), new Object).synchronized {
-      val entries =
-        graft.plans.FrameStore.sourceEntries(spark, sfDir, "documents")
-      val keyHash = java.security.MessageDigest.getInstance("SHA-1")
-        .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(16)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_media_${keyHash}_$kind")
-      val marker = new java.io.File(base, "_COMPLETE")
-      val manifest = new java.io.File(base, "_source_manifest")
-      // Files.readAllLines opens and CLOSES the stream (r15 advice: the
-      // scala.io.Source spelling leaked one file handle per validation,
-      // and validation runs on every invocation)
-      val current = marker.exists() && manifest.exists() && {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(manifest.toPath,
-          java.nio.charset.StandardCharsets.UTF_8).asScala.toList == entries
-      }
+                                  kind: String): String = {
+    import graft.plans.FrameStore
+    val base = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_media_${FrameStore.sha1Hex(sfDir).take(16)}_$kind")
+    // per-zone lock: unrelated zones must not serialize behind one monitor
+    FrameStore.lockFor(base.getAbsolutePath).synchronized {
+      val entries = graft.Tables.snapshot(spark, sfDir, "documents").entries
+      val basePath = new org.apache.hadoop.fs.Path(base.getAbsolutePath)
+      val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
+      val current = new java.io.File(base, "_COMPLETE").exists() &&
+        FrameStore.readManifest(fs, basePath, "_source_manifest") == entries
       if (!current) {
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
-          f.delete(); ()
-        }
-        if (base.exists()) rm(base)
+        FrameStore.deleteTree(base)
         base.mkdirs()
         val dir = base.getAbsolutePath
         val (corpus, ext) = kind match {
@@ -995,12 +977,12 @@ object MultimodalOps {
                 r.getAs[Array[Byte]](1))
             }
         }
-        java.nio.file.Files.write(manifest.toPath,
-          entries.mkString("\n").getBytes("UTF-8"))
-        marker.createNewFile()
+        FrameStore.writeManifest(fs, basePath, entries, "_source_manifest")
+        new java.io.File(base, "_COMPLETE").createNewFile()
       }
       base.getAbsolutePath
     }
+  }
 
   /** [[dhashPxPairs]] over REAL ON-DISK FILES (r12 verdict #5, open
     * since: the decode expressions had only ever read synthesized

@@ -471,7 +471,7 @@ object SimilarityOps {
         case _ =>
           val df = graft.plans.FrameStore.serveOrBuild(spark,
             knnStoreKey(sfDir, k, tables, bits),
-            graft.plans.FrameStore.sourceEntries(spark, sfDir, "embeddings")) {
+            graft.Tables.snapshot(spark, sfDir, "embeddings").entries) {
             knnGraph(spark, sfDir, k, tables, bits)
           }
           knnIndexCache.put((sfDir, k, tables, bits),

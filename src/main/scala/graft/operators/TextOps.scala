@@ -1782,7 +1782,7 @@ object TextOps {
         case _ =>
           val s = graft.plans.FrameStore.serveOrBuild(spark,
             lmStoreKey(sfDir),
-            graft.plans.FrameStore.sourceEntries(spark, sfDir, "documents")) {
+            graft.Tables.snapshot(spark, sfDir, "documents").entries) {
             lmSurprisalBuild(spark, sfDir)
           }
           surprisalCache.put(sfDir, (s, spark.sparkContext))
@@ -1836,56 +1836,19 @@ object TextOps {
   }
 
   /** On-disk LM BIGRAM-COUNT store with INCREMENTAL maintenance (r13
-    * verdict #6) — [[graft.plans.TextIndexCatalog]]'s manifest /
-    * delta / intent-marker discipline applied to the LM: the store
-    * holds PARTIAL-count parquet GENERATIONS; an append-only corpus
-    * change builds counts for the NEW doc files alone and appends them
-    * as one more generation — delta cost ∝ delta size, nothing
+    * verdict #6) — [[graft.plans.FrameStore.refresh]] applied to the LM:
+    * the store holds PARTIAL-count parquet GENERATIONS; an append-only
+    * corpus change builds counts for the NEW doc files alone and appends
+    * them as one more generation — delta cost ∝ delta size, nothing
     * corpus-wide runs — and readers merge generations with one
     * vocabulary-bounded groupBy-sum ([[lmCountsFromStats]]), sound
-    * because bigram counts over disjoint doc sets ADD. Any non-append
-    * change (rewritten or removed files) forces the idempotent full
-    * rebuild, as does a surviving `_delta_intent` marker (a crash
-    * between the parquet append and the manifest commit could
-    * otherwise double-count the same delta). */
-  @volatile private[graft] var lastLmStatsBuild: Seq[String] = Seq.empty
-
-  private[graft] def ensureLmStats(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      import org.apache.hadoop.fs.Path
-      val dir = graft.plans.FrameStore.dirFor(lmStatsKey(sfDir))
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val current =
-        graft.plans.FrameStore.sourceEntries(spark, sfDir, "documents")
-      val prev = graft.plans.FrameStore.readManifest(fs, p)
-      val intent = new Path(p, "_delta_intent")
-      val pending = fs.exists(intent)
-      val prevSet = prev.toSet
-      def statsOf(df: DataFrame): DataFrame =
-        docBigramsOf(df).groupBy("w1", "w2").agg(sum(col("tf")).as("cnt"))
-      if (prev.nonEmpty && prevSet == current.toSet && !pending) {
-        lastLmStatsBuild = Seq.empty
-      } else if (prev.nonEmpty && prevSet.subsetOf(current.toSet) &&
-                 !pending && !sfDir.startsWith("synth:")) {
-        val delta = current.filterNot(prevSet)
-        val deltaFiles = delta.map(e => new Path(
-          new Path(s"$sfDir/documents.parquet"),
-          e.substring(0, e.indexOf(':'))).toString)
-        fs.create(intent, true).close()
-        statsOf(spark.read.parquet(deltaFiles: _*))
-          .repartition(col("w1")).write.mode("append").parquet(dir)
-        graft.plans.FrameStore.writeManifest(fs, p, current)
-        fs.delete(intent, false)
-        lastLmStatsBuild = delta.map(e => e.substring(0, e.indexOf(':')))
-      } else {
-        statsOf(graft.Tables.load(spark, sfDir, "documents"))
-          .repartition(col("w1")).write.mode("overwrite").parquet(dir)
-        graft.plans.FrameStore.writeManifest(fs, p, current)
-        if (pending) fs.delete(intent, false)
-        lastLmStatsBuild = current.map(e => e.substring(0, e.indexOf(':')))
-      }
-      dir
+    * because bigram counts over disjoint doc sets ADD. */
+  private[graft] def ensureLmStats(spark: SparkSession,
+                                   sfDir: String): graft.plans.FrameStore.Refreshed =
+    graft.plans.FrameStore.refresh(spark,
+        graft.plans.FrameStore.dirFor(lmStatsKey(sfDir)), sfDir, "documents") { docs =>
+      docBigramsOf(docs).groupBy("w1", "w2").agg(sum(col("tf")).as("cnt"))
+        .repartition(col("w1"))
     }
 
   /** LSM COMPACTION for the stats store: merge every partial
@@ -1896,10 +1859,11 @@ object TextOps {
     * renamed in (compacting in place would truncate the directory the
     * merge job is still reading). Spec-gated: counts identical before
     * and after, and the next [[ensureLmStats]] builds nothing. */
-  private[graft] def compactLmStats(spark: SparkSession, sfDir: String): Unit =
-    synchronized {
+  private[graft] def compactLmStats(spark: SparkSession, sfDir: String): Unit = {
+    val dir = graft.plans.FrameStore.dirFor(lmStatsKey(sfDir))
+    graft.plans.FrameStore.lockFor(dir).synchronized {
       import org.apache.hadoop.fs.Path
-      val dir = ensureLmStats(spark, sfDir)
+      ensureLmStats(spark, sfDir)
       val p = new Path(dir)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       val manifest = graft.plans.FrameStore.readManifest(fs, p)
@@ -1913,13 +1877,14 @@ object TextOps {
         sys.error(s"compaction swap failed: $tmp -> $p")
       graft.plans.FrameStore.writeManifest(fs, p, manifest)
     }
+  }
 
   /** Merged bigram counts off the stats store — one vocabulary-bounded
     * groupBy-sum over however many partial generations the store
     * holds (an LSM read; compaction is just a full rebuild). */
   private[graft] def lmCountsFromStats(spark: SparkSession,
                                        sfDir: String): DataFrame =
-    spark.read.parquet(ensureLmStats(spark, sfDir))
+    spark.read.parquet(ensureLmStats(spark, sfDir).dir)
       .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt"))
 
   /** [[lmSurprisal]] SERVED THROUGH THE DURABLE STATS STORE — the

@@ -2,8 +2,6 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
@@ -34,29 +32,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * rewrite).
   */
 object TextIndexCatalog {
-  /** absolute docs-parquet path -> postings directory */
+  /** qualified docs-table root ([[graft.Tables.TableSnapshot.root]]) ->
+    * postings directory. Keys are qualified on the way in and out, so
+    * `x`, `/abs/x` and `file:/abs/x` name one entry. */
   private val indexes = TrieMap.empty[String, String]
 
-  /** docs-parquet path -> STEMMED postings directory (the plural-
+  /** qualified docs root -> STEMMED postings directory (the plural-
     * insensitive index variant; separate registry because the two
     * indexes answer different predicates). */
   private val stemmedIndexes = TrieMap.empty[String, String]
 
   def register(docsPath: String, indexPath: String): Unit =
-    indexes.put(docsPath, indexPath)
+    indexes.put(graft.Tables.qualify(docsPath), indexPath)
 
   def registerStemmed(docsPath: String, indexPath: String): Unit =
-    stemmedIndexes.put(docsPath, indexPath)
+    stemmedIndexes.put(graft.Tables.qualify(docsPath), indexPath)
 
   def clear(): Unit = { indexes.clear(); stemmedIndexes.clear() }
 
   /** The ONE definition of a variant's on-disk index directory —
-    * SHA-1(docsPath + variant + layout version) under
-    * tmpdir/graft-text-index — shared by [[ensureVariant]]
-    * (build/lookup) and [[purgeDirs]] (the cold-soak purge seam), so a
-    * layout-version bump can never leave purge deleting a STALE
-    * generation while ensure serves a new one: that skew would turn
-    * "cold" soak timings into silent warm index hits.
+    * SHA-1(qualified docs root + variant + layout version) under
+    * tmpdir/graft-text-index — shared by [[refresh]] and [[purgeDirs]]
+    * (the cold-soak purge seam), so purge always deletes exactly the
+    * directories refresh builds: a skew would turn "cold" soak timings
+    * into silent warm index hits.
     *
     * The layout suffix versions the variant whose SCHEMA changed:
     * adding the tf (then positions) column to the BASE postings would
@@ -64,33 +63,24 @@ object TextIndexCatalog {
     * ranked/positional paths. The stemmed layout is keyed separately so
     * a base-layout bump does not needlessly invalidate (and orphan)
     * existing stemmed directories. */
-  private def indexDirFor(sfDir: String, variant: String): java.io.File = {
-    val layoutVer = if (variant.isEmpty) "#p1" else "#s1"
-    val key = java.security.MessageDigest.getInstance("SHA-1")
-      .digest((s"$sfDir/documents.parquet" + variant + layoutVer).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-text-index"), key)
-  }
+  private def indexDirFor(docsRoot: String, stemmed: Boolean): String =
+    FrameStore.dirFor(docsRoot + (if (stemmed) "#stemmed#s1" else "#p1"),
+      "graft-text-index")
 
   /** Delete the ON-DISK index directories for `sfDir` (both variants,
     * current layouts) — the scale-soak seam: a cold index-build timing
     * must rebuild postings, not find a prior run's _SUCCESS in tmpdir. */
-  private[graft] def purgeDirs(sfDir: String): Unit =
-    Seq("", "#stemmed").foreach { variant =>
-      val dir = indexDirFor(sfDir, variant)
-      if (dir.exists) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(dir)
-      }
-    }
+  private[graft] def purgeDirs(sfDir: String): Unit = {
+    val root = graft.Tables.rootOf(sfDir, "documents")
+    Seq(false, true).foreach(v =>
+      FrameStore.deleteTree(new java.io.File(indexDirFor(root, v))))
+  }
 
-  def lookup(docsPath: String): Option[String] = indexes.get(docsPath)
+  def lookup(docsPath: String): Option[String] =
+    indexes.get(graft.Tables.qualify(docsPath))
 
   def lookupStemmed(docsPath: String): Option[String] =
-    stemmedIndexes.get(docsPath)
+    stemmedIndexes.get(graft.Tables.qualify(docsPath))
 
   /** (term, doc_id, tf, positions) postings over an arbitrary docs
     * frame — one row per distinct (term, doc_id) with the term's
@@ -132,140 +122,44 @@ object TextIndexCatalog {
   def postings(spark: SparkSession, docsPath: String): DataFrame =
     postingsOf(spark.read.parquet(docsPath))
 
-  /** Data files the index must cover, as relativePath:length:mtime
-    * entries — RECURSIVE, because production doc tables are routinely
-    * directory-partitioned, and a manifest that only sees top-level
-    * files would serve stale postings when nested files change. Same
-    * visibility rule as Spark's parquet reader: any path component led
-    * by '_' or '.' is metadata, not data. Hadoop FileSystem API, not
-    * java.io.File: the docs "directory" is an object-store prefix in
-    * production and a local path only in tests. */
-  private def dataFileEntries(fs: FileSystem, docsPath: Path): Seq[String] = {
-    val st = fs.getFileStatus(docsPath)
-    if (!st.isDirectory)
-      return Seq(s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-    val rootUri = docsPath.toUri
-    val out = Seq.newBuilder[String]
-    val it = fs.listFiles(docsPath, true)
-    while (it.hasNext) {
-      val s = it.next()
-      val rel = rootUri.relativize(s.getPath.toUri).getPath
-      val hidden = rel.split("/")
-        .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-      if (!hidden) out += s"$rel:${s.getLen}:${s.getModificationTime}"
-    }
-    out.result().sorted
-  }
-
-  /** File names (manifest-entry prefixes) the most recent [[ensureIndex]]
-    * call actually built postings for: empty when the index was served
-    * as-is, the delta files on an append-only refresh, every data file
-    * on a full (re)build. Test introspection for the delta contract. */
-  @volatile var lastBuild: Seq[String] = Seq.empty
-
   /** Materialize + register the text index for `sfDir`'s documents
-    * table, with INCREMENTAL maintenance: the index directory (under
-    * java.io.tmpdir, keyed by a hash of the docs path) carries a
-    * `_manifest` of the data files it covers as (name, length, mtime)
-    * entries. Per call:
-    *
-    *  - manifest == current files → serve as-is (no build);
-    *  - manifest ⊂ current files, covered entries unchanged → build
-    *    postings for the NEW files only and append them (sound because
-    *    doc_id uniquely keys the table, see [[postingsOf]]) — the
-    *    append-only path a 100 TB corpus takes daily;
-    *  - anything else (changed/removed files, first build) → full
-    *    rebuild, so a regenerated docs parquet can never be served
-    *    stale postings.
+    * table, with INCREMENTAL maintenance ([[FrameStore.refresh]]): the
+    * index directory (under java.io.tmpdir, keyed by a hash of the
+    * qualified docs root) carries a `_manifest` of the snapshot it
+    * covers. An unchanged table is served as-is; appended files get
+    * postings built for them alone and appended (sound because doc_id
+    * uniquely keys the table, see [[postingsOf]]) — the append-only
+    * path a 100 TB corpus takes daily; anything else rebuilds, so a
+    * regenerated docs parquet is never served stale postings.
     *
     * Each build repartitions by term and sorts within partitions —
     * the build parallelizes across the cluster and every term's
     * postings land contiguously in one file per build, so the probe's
     * term-equality pushed filter prunes to one partition's row groups
     * (the bucketed-by-term layout of SURVEY §8.1; delta builds add one
-    * term-partitioned file generation each). Synchronized: concurrent
-    * callers in this JVM must not race the append (the metastore
-    * transaction's stand-in). */
-  def ensureIndex(spark: SparkSession, sfDir: String): String =
-    ensureVariant(spark, sfDir, "", postingsOf, register)
+    * term-partitioned file generation each). Returns the index
+    * directory, the snapshot the refresh compared (callers resolve the
+    * docs relation against it, so a search lists the table once) and
+    * the outcome. */
+  def refresh(spark: SparkSession, sfDir: String,
+              stemmed: Boolean = false): FrameStore.Refreshed = {
+    val dir = indexDirFor(graft.Tables.rootOf(sfDir, "documents"), stemmed)
+    val r = FrameStore.refresh(spark, dir, sfDir, "documents") { docs =>
+      (if (stemmed) stemmedPostingsOf(docs) else postingsOf(docs))
+        .repartition(col("term")).sortWithinPartitions("term")
+    }
+    (if (stemmed) stemmedIndexes else indexes).put(r.snapshot.root, dir)
+    r
+  }
 
-  /** [[ensureIndex]] for the stemmed postings: same incremental
+  /** [[refresh]] of the token index; returns its directory. */
+  def ensureIndex(spark: SparkSession, sfDir: String): String =
+    refresh(spark, sfDir).dir
+
+  /** [[refresh]] of the stemmed postings: same incremental
     * manifest/delta machinery, separate directory and registry. */
   def ensureStemmedIndex(spark: SparkSession, sfDir: String): String =
-    ensureVariant(spark, sfDir, "#stemmed", stemmedPostingsOf, registerStemmed)
-
-  private def ensureVariant(spark: SparkSession, sfDir: String,
-      variant: String, build: DataFrame => DataFrame,
-      registerFn: (String, String) => Unit): String = synchronized {
-    val docsPath = s"$sfDir/documents.parquet"
-    val hconf = spark.sessionState.newHadoopConf()
-    // scale-soak seam: a synth: corpus is deterministic and immutable
-    // for a given N, so its manifest is one constant entry — built
-    // once per (N, variant), never delta'd, never stale. docsPath then
-    // serves only as the index-directory key (no file ever exists).
-    val synthCorpus = sfDir.startsWith("synth:")
-    val current: Seq[String] =
-      if (synthCorpus) Seq(s"$sfDir:immutable")
-      else {
-        val dPath = new Path(docsPath)
-        dataFileEntries(dPath.getFileSystem(hconf), dPath)
-      }
-    val idxDir = indexDirFor(sfDir, variant).getAbsolutePath
-    val idxPath = new Path(idxDir)
-    val ifs = idxPath.getFileSystem(hconf)
-    val manifestPath = new Path(idxPath, "_manifest")
-    val built = ifs.exists(new Path(idxPath, "_SUCCESS"))
-    val prev: Seq[String] =
-      if (built && ifs.exists(manifestPath)) {
-        val in = ifs.open(manifestPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      } else Seq.empty
-    def writeManifest(): Unit = {
-      val out = ifs.create(manifestPath, true)
-      try out.write(current.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-    def bucketedWrite(df: DataFrame, mode: String): Unit =
-      df.repartition(col("term")).sortWithinPartitions("term")
-        .write.mode(mode).parquet(idxDir)
-    // crash-safety marker for the delta-append path: the append parquet
-    // job and the manifest write are two non-atomic steps, and a crash
-    // between them would leave committed delta rows the manifest does
-    // not record — the next call would re-append the same delta and
-    // every tf-based rewrite would silently double-count. The intent
-    // marker is written BEFORE the append and removed only after the
-    // manifest commits; a surviving marker therefore means "an append
-    // may have partially happened" and forces a full overwrite rebuild
-    // (idempotent — overwrite + manifest can be retried any number of
-    // times).
-    val intentPath = new Path(idxPath, "_delta_intent")
-    val pendingDelta = ifs.exists(intentPath)
-    val prevSet = prev.toSet
-    if (prev.nonEmpty && prevSet == current.toSet && !pendingDelta) {
-      lastBuild = Seq.empty // up to date
-    } else if (prev.nonEmpty && prevSet.subsetOf(current.toSet) &&
-               !pendingDelta && !synthCorpus) {
-      val delta = current.filterNot(prevSet)
-      val deltaFiles = delta.map(e =>
-        new Path(new Path(docsPath), e.substring(0, e.indexOf(':'))).toString)
-      val out = ifs.create(intentPath, true)
-      out.close()
-      bucketedWrite(build(spark.read.parquet(deltaFiles: _*)), "append")
-      writeManifest()
-      ifs.delete(intentPath, false)
-      lastBuild = delta.map(e => e.substring(0, e.indexOf(':')))
-    } else {
-      // Tables.load resolves both the parquet and the synth: corpus
-      bucketedWrite(build(graft.Tables.load(spark, sfDir, "documents")),
-        "overwrite")
-      writeManifest()
-      if (pendingDelta) ifs.delete(intentPath, false)
-      lastBuild = current.map(e => e.substring(0, e.indexOf(':')))
-    }
-    registerFn(docsPath, idxDir)
-    idxDir
-  }
+    refresh(spark, sfDir, stemmed = true).dir
 }
 
 /** The rewrite rule. Matches both spellings of the whole-token search
@@ -648,8 +542,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
   private def bareRegisteredScan(plan: LogicalPlan): Option[String] = plan match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
       fs.location.rootPaths.collectFirst {
-        case p if TextIndexCatalog.lookup(p.toUri.getPath).isDefined =>
-          p.toUri.getPath
+        case p if TextIndexCatalog.lookup(p.toString).isDefined => p.toString
       }
     case org.apache.spark.sql.catalyst.plans.logical.Project(pl, c)
         if pl.forall(_.isInstanceOf[Attribute]) => bareRegisteredScan(c)
@@ -680,7 +573,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     plan match {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         fs.location.rootPaths.collectFirst {
-          case p if lookup(p.toUri.getPath).isDefined => p.toUri.getPath
+          case p if lookup(p.toString).isDefined => p.toString
         }
       case org.apache.spark.sql.catalyst.plans.logical.Project(pl, c)
           if pl.forall {

@@ -686,18 +686,18 @@ class OperatorSpec extends AnyFunSuite {
     Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(docsDir)
     TextIndexCatalog.clear()
-    val idx = TextIndexCatalog.ensureIndex(spark, tmp)
-    val fullBuild = TextIndexCatalog.lastBuild
+    val first = TextIndexCatalog.refresh(spark, tmp)
+    val idx = first.dir
+    val fullBuild = first.outcome.files
     assert(fullBuild.nonEmpty, "first call must be a full build")
     // idempotent: unchanged corpus builds nothing
-    TextIndexCatalog.ensureIndex(spark, tmp)
-    assert(TextIndexCatalog.lastBuild.isEmpty, "unchanged corpus must not rebuild")
+    assert(TextIndexCatalog.refresh(spark, tmp).outcome.files.isEmpty,
+      "unchanged corpus must not rebuild")
     // appended doc file: postings built for the NEW file only, unioned
     // into the same index directory
     Seq((3L, "gamma delta")).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(docsDir)
-    TextIndexCatalog.ensureIndex(spark, tmp)
-    val delta = TextIndexCatalog.lastBuild
+    val delta = TextIndexCatalog.refresh(spark, tmp).outcome.files
     assert(delta.nonEmpty && delta.forall(f => !fullBuild.contains(f)),
       s"delta build must cover only the appended files: $delta vs $fullBuild")
     def indexed(): Set[(String, Long)] = spark.read.parquet(idx)
@@ -722,8 +722,7 @@ class OperatorSpec extends AnyFunSuite {
     Seq((1L, "alpha beta"), (2L, "beta gamma"), (9L, "omega epsilon"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(docsDir)
-    TextIndexCatalog.ensureIndex(spark, tmp)
-    assert(TextIndexCatalog.lastBuild.nonEmpty)
+    assert(TextIndexCatalog.refresh(spark, tmp).outcome.files.nonEmpty)
     assert(indexed() == scratch(), "rebuild must replace stale postings")
     assert(indexed().contains(("omega", 9L)) && !indexed().exists(_._1 == "delta"))
     TextIndexCatalog.clear()
@@ -743,12 +742,10 @@ class OperatorSpec extends AnyFunSuite {
     assert(terms.contains("merge") && terms.contains("story"))
     assert(!terms.contains("merges") && !terms.contains("stories"))
     // append builds a delta only
-    TextIndexCatalog.ensureStemmedIndex(spark, tmp)
-    assert(TextIndexCatalog.lastBuild.isEmpty)
+    assert(TextIndexCatalog.refresh(spark, tmp, stemmed = true).outcome.files.isEmpty)
     Seq((3L, "merge bodies")).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(docsDir)
-    TextIndexCatalog.ensureStemmedIndex(spark, tmp)
-    assert(TextIndexCatalog.lastBuild.nonEmpty)
+    assert(TextIndexCatalog.refresh(spark, tmp, stemmed = true).outcome.files.nonEmpty)
     val got = spark.read.parquet(idx)
       .filter(col("term") === "merge").select("doc_id")
       .as[Long].collect().toSet
@@ -4540,17 +4537,15 @@ class OperatorSpec extends AnyFunSuite {
     Seq((1L, "alpha beta gamma alpha beta"), (2L, "beta gamma beta gamma"))
       .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(docsDir)
     TextOps.purgeLmStore(tmp)
-    TextOps.ensureLmStats(spark, tmp)
-    val full = TextOps.lastLmStatsBuild
+    val full = TextOps.ensureLmStats(spark, tmp).outcome.files
     assert(full.nonEmpty, "first call must be a full build")
-    TextOps.ensureLmStats(spark, tmp)
-    assert(TextOps.lastLmStatsBuild.isEmpty, "unchanged corpus must not rebuild")
+    assert(TextOps.ensureLmStats(spark, tmp).outcome.files.isEmpty,
+      "unchanged corpus must not rebuild")
     // appended doc file: counts built for the NEW file only (delta
     // cost ∝ delta size), landed as one more partial generation
     Seq((3L, "gamma delta alpha gamma delta")).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(docsDir)
-    TextOps.ensureLmStats(spark, tmp)
-    val delta = TextOps.lastLmStatsBuild
+    val delta = TextOps.ensureLmStats(spark, tmp).outcome.files
     assert(delta.nonEmpty && delta.forall(f => !full.contains(f)),
       s"delta build must cover only appended files: $delta vs $full")
     def counts(): Set[(String, String, Long)] =
@@ -4562,21 +4557,19 @@ class OperatorSpec extends AnyFunSuite {
     // the LSM read (base + delta partials) equals a from-scratch
     // monolithic rebuild over the combined corpus, bit for bit
     TextOps.purgeLmStore(tmp)
-    TextOps.ensureLmStats(spark, tmp)
-    assert(TextOps.lastLmStatsBuild.size == 2, "recompute must cover both files")
+    assert(TextOps.ensureLmStats(spark, tmp).outcome.files.size == 2,
+      "recompute must cover both files")
     assert(counts() == merged, "merged partials diverged from the recompute")
     // compaction: generations collapse to one, counts identical, and
     // the next ensure builds nothing (manifest/coverage unchanged)
     TextOps.compactLmStats(spark, tmp)
     assert(counts() == merged, "compaction changed the merged counts")
-    TextOps.ensureLmStats(spark, tmp)
-    assert(TextOps.lastLmStatsBuild.isEmpty,
+    assert(TextOps.ensureLmStats(spark, tmp).outcome.files.isEmpty,
       "post-compaction ensure must serve, not rebuild")
     // a REWRITTEN file (not append) must force the full-rebuild path
     Seq((1L, "alpha beta"), (2L, "beta"), (3L, "gamma delta alpha"))
       .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(docsDir)
-    TextOps.ensureLmStats(spark, tmp)
-    assert(TextOps.lastLmStatsBuild.nonEmpty, "rewrite must rebuild")
+    assert(TextOps.ensureLmStats(spark, tmp).outcome.files.nonEmpty, "rewrite must rebuild")
   }
 
   test("durable kNN catalog: a fresh session serves the graph off disk, bit-identical to a scratch build") {

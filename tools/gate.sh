@@ -5,6 +5,10 @@
 #   tools/gate.sh [sfDir]        # default /root/testdata/sf0.01
 #
 # Chains, failing fast on the first red:
+#   0. perfbench/build.py       — the benchmark's sources compile against
+#                                 the program (tier-1 never compiles
+#                                 perfbench/, so an API change that breaks
+#                                 the benchmark's calls fails here)
 #   1. sbt test                 — every ScalaTest suite (streaming,
 #                                 property, plan-shape, spill specs)
 #   2. graft.EntrySmoke         — flagship query returns rows at sf0.001
@@ -27,6 +31,9 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-gate.XXXXXX)"
 trap 'rm -rf "$OUT"' EXIT
+
+echo "== gate 0/4: benchmark compiles against the program =="
+python3 perfbench/build.py
 
 echo "== gate 1/4: sbt test =="
 sbt -batch test
