@@ -246,7 +246,6 @@ object SparkEntry {
     "dd_containment"           -> DedupOps.containmentPairs _,
     "dd_minhash_oph"           -> ((s: SparkSession, d: String) => DedupOps.minhashOph(s, d)),
     "dd_minhash_jaccard_est"   -> DedupOps.minhashJaccardEst _,
-    "dd_dup_clusters_star"     -> DedupOps.dupClustersStar _,
     "dd_minhash_lsh"           -> DedupOps.minhashLsh _,
     "dd_published_pairs"       -> DedupOps.publishedPairs _,
     "dd_minhash_band_sweep"    -> DedupOps.minhashBandSweep _,
@@ -4767,63 +4766,6 @@ object SparkEntry {
     // dd_ngram_jaccard result): recursive reachability closure over the
     // bidirected edges, min reachable id = the component label the
     // min-label propagation loop converges to
-    // star-contraction CC: same components, same oracle as
-    // dd_dup_clusters (output contract identical by construction)
-    "dd_dup_clusters_star" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 200000, 'extra words added ' || text FROM documents WHERE doc_id % 10 = 5),
-        |t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> length(x) > 0) AS ws
-        |  FROM corpus),
-        |w2 AS (
-        |  SELECT doc_id,
-        |    list_transform(ws, w -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split(w, ''), c -> ascii(c))),
-        |      (h, c) -> (h * 31 + c) % 1000000000000000)) AS whs
-        |  FROM t),
-        |s AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(whs) >= 3 THEN
-        |      list_transform(range(1, len(whs) - 1),
-        |        i -> ((whs[i] * 31 + whs[i+1]) % 1000000000000000 * 31
-        |              + whs[i+2]) % 1000000000000000)
-        |    ELSE [] END) AS sh
-        |  FROM w2),
-        |f AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS s FROM f),
-        |dfq AS (SELECT s, COUNT(*) AS df FROM ex GROUP BY s),
-        |pr AS (SELECT doc_id, n, s FROM (
-        |    SELECT ex.doc_id, ex.s, ex.n,
-        |      row_number() OVER (PARTITION BY ex.doc_id ORDER BY dfq.df, ex.s) AS rn
-        |    FROM ex JOIN dfq USING (s)) z
-        |  WHERE rn <= n // 2 + 1),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM pr a JOIN pr b ON a.s = b.s AND a.doc_id < b.doc_id
-        |    AND 2 * LEAST(a.n, b.n) >= GREATEST(a.n, b.n)),
-        |v AS (SELECT doc_a, doc_b,
-        |    CAST(len(list_intersect(fa.sh, fb.sh)) AS DOUBLE)
-        |      / (len(fa.sh) + len(fb.sh) - len(list_intersect(fa.sh, fb.sh))) AS jaccard
-        |  FROM cand
-        |  JOIN f fa ON fa.doc_id = doc_a
-        |  JOIN f fb ON fb.doc_id = doc_b),
-        |pairs AS (SELECT doc_a, doc_b FROM v WHERE jaccard >= 0.5),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |r AS (
-        |  SELECT src AS node, src AS reach FROM edges
-        |  UNION
-        |  SELECT r.node, e.dst FROM r JOIN edges e ON e.src = r.reach),
-        |lab AS (SELECT node AS doc_id, MIN(reach) AS cluster_id FROM r GROUP BY node),
-        |sz AS (SELECT cluster_id, COUNT(*) AS csize FROM lab GROUP BY cluster_id)
-        |SELECT l.doc_id, l.cluster_id, sz.csize,
-        |  CAST(l.doc_id = l.cluster_id AS BIGINT) AS is_canonical
-        |FROM lab l JOIN sz USING (cluster_id)
-        |ORDER BY doc_id""".stripMargin,
     "dd_dup_clusters" ->
       """WITH RECURSIVE corpus AS (
         |  SELECT doc_id, text FROM documents

@@ -209,8 +209,8 @@ object DedupOps {
     *    signatures derived from `shingles` (row-local affine mins).
     *  - `ngram_pairs`   — the exact prefix-filtered Jaccard pairs
     *    ([[ngramJaccardPairs]]' verify output): [[dupClusters]],
-    *    [[dupClustersStar]], [[softDedupWeights]] and [[lshQuality]]'s
-    *    truth arm all re-consume the identical pair set.
+    *    [[softDedupWeights]] and [[lshQuality]]'s truth arm all
+    *    re-consume the identical pair set.
     *  - `lsh_pairs`     — the banded-candidate + exact-verify pair set
     *    ([[minhashLsh]]'s output; [[dedupSurvivors]]' edge list).
     * Pair frames are near-dup-sized (≪ corpus); the shingle frames are
@@ -332,22 +332,30 @@ object DedupOps {
 
   private[graft] def clearPublishedTables(): Unit = publishedTables.clear()
 
-  /** Cold-soak seam for the published table's DISK layer (the session
-    * seam is [[clearPublishedTables]]): drop the catalog entry and
-    * delete the external location + manifest so a cold soak rep pays
-    * the full publish, not the metadata-only re-register. */
-  /** SHA-1-prefixed table name for the corpus path — the
+  // the table name, its location and the session entry all key on the
+  // documents table's qualified root: a bare path and a `file:` URI
+  // publish once
+  private def docsRoot(sfDir: String) = graft.Tables.rootOf(sfDir, "documents")
+
+  /** SHA-1-prefixed table name for the corpus — the
     * FrameStore.dirFor idiom (r14 verdict: String.hashCode's 32 bits
     * could alias two corpus paths and re-point one session's table at
     * the other's data; the location was already SHA-1-keyed, the NAME
     * now matches). */
   private def publishedTableName(sfDir: String): String =
-    "dd_signatures_" + graft.plans.FrameStore.sha1Hex(sfDir).take(16)
+    "dd_signatures_" + graft.plans.FrameStore.sha1Hex(docsRoot(sfDir)).take(16)
 
+  private[graft] def publishedStoreKey(sfDir: String): String =
+    s"dd-published#${docsRoot(sfDir)}#v1"
+
+  /** Cold-soak seam for the published table's DISK layer (the session
+    * seam is [[clearPublishedTables]]): drop the catalog entry and
+    * delete the external location + manifest so a cold soak rep pays
+    * the full publish, not the metadata-only re-register. */
   private[graft] def purgePublishedStore(spark: SparkSession,
                                          sfDir: String): Unit = {
     spark.sql("DROP TABLE IF EXISTS " + publishedTableName(sfDir))
-    graft.plans.FrameStore.purge(s"dd-published#$sfDir#v1")
+    graft.plans.FrameStore.purge(publishedStoreKey(sfDir))
   }
 
   /** Durable publish for [[publishedPairs]] — publish ONCE PER CORPUS
@@ -366,9 +374,9 @@ object DedupOps {
   private[graft] def publishedSignatureTable(spark: SparkSession,
                                              sfDir: String): String = {
     publishedTables.filterInPlace { case ((_, sc), _) => !sc.isStopped }
-    publishedTables.getOrElseUpdate((sfDir, spark.sparkContext), {
+    publishedTables.getOrElseUpdate((docsRoot(sfDir), spark.sparkContext), {
       val tbl = publishedTableName(sfDir)
-      val locStr = graft.plans.FrameStore.dirFor(s"dd-published#$sfDir#v1")
+      val locStr = graft.plans.FrameStore.dirFor(publishedStoreKey(sfDir))
       val loc = new org.apache.hadoop.fs.Path(locStr)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
       val entries = graft.Tables.snapshot(spark, sfDir, "documents").entries
@@ -698,167 +706,10 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  /** Connected components by LARGE-STAR / SMALL-STAR alternation
-    * (Kiveris et al. 2014, "Connected Components in MapReduce and
-    * Beyond" — public) — the scale-hardened alternative to
-    * [[ccLabels]]' min-label propagation that SURVEY §8.2 names as the
-    * drop-in when component diameters grow: min-label needs
-    * O(diameter) rounds, star-contraction needs O(log diameter),
-    * because each round HALVES path lengths by rewiring nodes straight
-    * onto smaller nodes instead of copying labels one hop.
-    *
-    * Per round: large-star symmetrizes the edge list, takes each
-    * node's min neighbor (one map-side-combined agg), and points every
-    * LARGER neighbor at that min; small-star orients each edge
-    * large→small and points the remaining (smaller) neighbors plus the
-    * node itself at the min. Both are one agg + one equi-join + one
-    * distinct over EDGES — the same per-round budget as a min-label
-    * round — but the edge set contracts toward the final star instead
-    * of staying fixed. Convergence = the edge multiset is stable: a
-    * (count, Σu, Σv) DECIMAL(38,0) fingerprint rides each checkpoint
-    * job as the cheap candidate signal, and a matching fingerprint is
-    * CONFIRMED by exact multiset equality before the loop trusts it —
-    * distinct edge sets can collide on all three sums, so the
-    * fingerprint alone is not a proof (see the loop comment for the
-    * soundness argument). At the fixpoint every non-minimum
-    * node holds exactly one edge to its component minimum, so labels
-    * read off the final edges with no propagation pass.
-    *
-    * Output contract is IDENTICAL to [[ccLabels]] — (node, label =
-    * component min) — which is what lets [[dupClustersStar]] share
-    * dd_dup_clusters' oracle and the spec assert algorithm equivalence
-    * on the same pair graphs. */
-  private[graft] def ccLabelsStar(pairsDf: DataFrame): DataFrame = {
-    val pairs = pairsDf.select("doc_a", "doc_b")
-      .filter(col("doc_a") =!= col("doc_b"))
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-      val m = sym.groupBy("u").agg(least(col("u"), min(col("v"))).as("m"))
-      // NO dedup here: the consumer is always smallStar, whose min-agg
-      // is duplicate-insensitive and whose tail distinct restores the
-      // set property — dropping this distinct removes one shuffle per
-      // star pair (2 per materialized job) at the price of duplicate
-      // rows in ONE intermediate (bounded: ≤2× the round's edge list)
-      sym.join(m, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val ori = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val m = ori.groupBy("u").agg(min(col("v")).as("m"))
-      ori.join(m, "u")
-        .select(explode(array(
-          struct(col("v").as("a"), col("m").as("b")),
-          struct(col("u").as("a"), col("m").as("b")))).as("p"))
-        .select(col("p.a").as("u"), col("p.b").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    val edges0 = pairs
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .distinct()
-      .repartition(col("u"))
-      .localCheckpoint()
-    // SEED: hook every node onto l(n) = min(n ∪ N(n)) — the min-label
-    // engine's fused one-agg seed, applied here as a CONTRACTION. The
-    // hook is sound because n is adjacent to l(n) (l(n) is n itself or
-    // one of its neighbors), so merging n into l(n) only ever merges
-    // connected nodes, and each component's minimum m survives as a
-    // contracted node (l(m) = m — no neighbor of the component min is
-    // smaller). Star components collapse to singletons AT SEED TIME and
-    // chains halve, so the star alternation below starts on a graph one
-    // materialized job closer to its fixpoint. Cost: one agg over the
-    // symmetric list plus two map-sized-or-not joins — cheaper than the
-    // 2-large + 2-small star rounds of the loop job it replaces.
-    val sym0 = edges0.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-    val seed = sym0.groupBy("u")
-      .agg(least(col("u"), min(col("v"))).as("l"))
-      .localCheckpoint() // one (node, hook-target) row per vertex
-    val edges1 = edges0
-      .join(seed.select(col("u"), col("l").as("lu")), Seq("u"))
-      .join(seed.select(col("u").as("v"), col("l").as("lv")), Seq("v"))
-      .select(col("lu").as("u"), col("lv").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .repartition(col("u"))
-      .localCheckpoint()
-    var edges = edges1
-    // TWO star rounds per materialized job (the ccLabels lesson: the
-    // per-action scheduling floor dominates these loops locally, and
-    // the lineage between checkpoints — two agg+join+distinct pairs —
-    // is safely re-computable). Convergence is detected in two tiers:
-    // the (count, Σu, Σv) fingerprint riding each checkpoint job is
-    // the CHEAP candidate signal, and — because distinct edge multisets
-    // can collide on all three sums — a matching fingerprint is then
-    // CONFIRMED by exact multiset equality (equal counts + one-sided
-    // exceptAll empty) before the loop trusts it. Consecutive equal
-    // checkpoints are a sound fixpoint: the star alternation's height
-    // potential strictly decreases until the final star forms, so a
-    // two-round identity can only occur at the star itself. The exact
-    // check costs one extra job ONLY on candidate rounds, never in
-    // steady state.
-    def observed(e: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame =
-      e.observe(obs,
-        count(lit(1)).as("cnt"),
-        coalesce(sum(col("u").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("su"),
-        coalesce(sum(col("v").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("sv"))
-    def summary(obs: org.apache.spark.sql.Observation) =
-      (obs.get("cnt").asInstanceOf[Long],
-        obs.get("su").asInstanceOf[java.math.BigDecimal],
-        obs.get("sv").asInstanceOf[java.math.BigDecimal])
-    var it = 0
-    var converged = false
-    var prev: Option[(Long, java.math.BigDecimal, java.math.BigDecimal)] = None
-    while (!converged && it < 25) {
-      it += 1
-      val obs = org.apache.spark.sql.Observation(s"ccstar_$it")
-      val next = observed(smallStar(largeStar(smallStar(largeStar(edges)))), obs)
-        .localCheckpoint()
-      val cur = summary(obs)
-      if (prev.contains(cur))
-        converged = next.exceptAll(edges).limit(1).count() == 0
-      prev = Some(cur)
-      edges = next
-    }
-    // the converged star labels CONTRACTED nodes: every non-min
-    // contracted node has exactly one edge to its component min;
-    // minima and singletons label themselves. Original nodes map back
-    // through the seed (label(n) = starLabel(l(n))) — the seed table
-    // already enumerates the vertex set (it has one row per node of
-    // the symmetric list), so no separate node scan of edges0 is
-    // needed, and `pairs` is never re-read (reading it here would
-    // re-execute the entire upstream pair-generation plan, the most
-    // expensive subplan in the query, just to enumerate vertices).
-    val tgt = edges.groupBy(col("u").as("l")).agg(min(col("v")).as("t"))
-    seed.join(tgt, Seq("l"), "left")
-      .select(col("u").as("node"), coalesce(col("t"), col("l")).as("label"))
-  }
-
-  /** [[dupClustersOf]] on the star-contraction engine — identical
-    * output (and oracle) by construction; registered so the
-    * scale-path algorithm is itself correctness-gated, not just
-    * documented. */
-  def dupClustersStar(spark: SparkSession, sfDir: String): DataFrame = {
-    val wCl = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
-    ccLabelsStar(ngramJaccardPairsUnsorted(spark, sfDir))
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      .withColumn("csize", count(lit(1)).over(wCl))
-      .select(col("doc_id"), col("cluster_id"), col("csize"),
-        (col("doc_id") === col("cluster_id")).cast("long").as("is_canonical"))
-      .orderBy("doc_id")
-  }
-
   /** Min-label connected components of a (doc_a, doc_b) pair list:
     * (node, label) with label = the component's minimum doc_id. The
-    * shared engine under [[dupClustersOf]] and [[dedupSurvivors]]. */
+    * one connected-components engine, under [[dupClustersOf]] and
+    * [[dedupSurvivors]]. */
   private[graft] def ccLabels(pairsDf: DataFrame): DataFrame = {
     val pairs = pairsDf.select("doc_a", "doc_b")
     // undirect the pair list in ONE pass (explode of both orientations)

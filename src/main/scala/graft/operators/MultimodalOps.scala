@@ -941,8 +941,9 @@ object MultimodalOps {
     * corpus — blobs in an object store, one file per asset — and the
     * write is executor-side (`foreachPartition`: each task lands its
     * own partition's files; no driver collect). The directory is keyed
-    * by the SHA-1 of the corpus path ([[graft.plans.FrameStore.sha1Hex]])
-    * and validated against the documents table's snapshot entries
+    * by the SHA-1 of the documents table's qualified root
+    * ([[graft.plans.FrameStore.sha1Hex]]; a bare path and a `file:` URI
+    * share one zone) and validated against the table's snapshot entries
     * (`_source_manifest`) on EVERY call (r14 advice: a
     * corpus rewritten in place with the same row count must rebuild,
     * not serve stale payload files). Completion order is files →
@@ -951,8 +952,9 @@ object MultimodalOps {
   private[graft] def mediaFileDir(spark: SparkSession, sfDir: String,
                                   kind: String): String = {
     import graft.plans.FrameStore
+    val corpusKey = FrameStore.sha1Hex(graft.Tables.rootOf(sfDir, "documents")).take(16)
     val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_media_${FrameStore.sha1Hex(sfDir).take(16)}_$kind")
+      s"graft_media_${corpusKey}_$kind")
     // per-zone lock: unrelated zones must not serialize behind one monitor
     FrameStore.lockFor(base.getAbsolutePath).synchronized {
       val entries = graft.Tables.snapshot(spark, sfDir, "documents").entries

@@ -445,8 +445,10 @@ object SimilarityOps {
     else math.max(4,
       math.ceil(math.log(n.toDouble / target) / math.log(2.0)).toInt)
 
-  private def knnStoreKey(sfDir: String, k: Int, tables: Int, bits: Int) =
-    s"knn-graph#$sfDir#k$k#t$tables#b$bits#v1"
+  // the embeddings table's qualified root names the corpus in the store
+  // key and the session cache: a bare path and a `file:` URI share both
+  private[graft] def knnStoreKey(sfDir: String, k: Int, tables: Int, bits: Int) =
+    s"knn-graph#${graft.Tables.rootOf(sfDir, "embeddings")}#k$k#t$tables#b$bits#v1"
 
   /** Cold-soak seam for the DISK layer (the session seam is
     * [[clearKnnIndexCache]]): purge the stored default-parameter graph
@@ -466,16 +468,16 @@ object SimilarityOps {
                     tables: Int = 8, bits: Int = 0): DataFrame =
     knnIndexCache.synchronized {
       knnIndexCache.filterInPlace { case (_, (_, sc)) => !sc.isStopped }
-      knnIndexCache.get((sfDir, k, tables, bits)) match {
+      val cacheKey = (graft.Tables.rootOf(sfDir, "embeddings"), k, tables, bits)
+      knnIndexCache.get(cacheKey) match {
         case Some((df, sc)) if sc eq spark.sparkContext => df
         case _ =>
-          val df = graft.plans.FrameStore.serveOrBuild(spark,
-            knnStoreKey(sfDir, k, tables, bits),
-            graft.Tables.snapshot(spark, sfDir, "embeddings").entries) {
+          val stored = graft.plans.FrameStore.serveOrBuild(spark,
+            knnStoreKey(sfDir, k, tables, bits), sfDir, "embeddings") {
             knnGraph(spark, sfDir, k, tables, bits)
           }
-          knnIndexCache.put((sfDir, k, tables, bits),
-            (df, spark.sparkContext))
+          val df = spark.read.parquet(stored.dir)
+          knnIndexCache.put(cacheKey, (df, spark.sparkContext))
           df
       }
     }

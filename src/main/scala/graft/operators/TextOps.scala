@@ -1746,18 +1746,22 @@ object TextOps {
     * surprisal_bits, surprisal_milli) frame, every later consumer
     * gets the SAME pinned rows (a free lookup; bit-identical by
     * construction, and spec-pinned against a scratch build). Entries
-    * are keyed on the corpus path and die with their SparkContext;
-    * checkpointed RDDs survive `spark.catalog.clearCache()` (that
-    * clears only the SQL cache), which is exactly the between-query
-    * reuse the Verify/Bench harness exercises. [[clearLmCache]] is
-    * the soak seam for a true cold build. */
+    * are keyed on the corpus's qualified root and die with their
+    * SparkContext; checkpointed RDDs survive
+    * `spark.catalog.clearCache()` (that clears only the SQL cache),
+    * which is exactly the between-query reuse the Verify/Bench harness
+    * exercises. [[clearLmCache]] is the soak seam for a true cold
+    * build. */
   private val surprisalCache =
     TrieMap.empty[String, (DataFrame, org.apache.spark.SparkContext)]
 
   private[graft] def clearLmCache(): Unit = surprisalCache.clear()
 
-  private def lmStoreKey(sfDir: String) = s"lm-surprisal#$sfDir#v1"
-  private def lmStatsKey(sfDir: String) = s"lm-stats#$sfDir#v1"
+  // every LM key names the corpus by its qualified root, so a bare path
+  // and a `file:` URI share one cache entry and one copy of each store
+  private def docsRoot(sfDir: String) = graft.Tables.rootOf(sfDir, "documents")
+  private[graft] def lmStoreKey(sfDir: String) = s"lm-surprisal#${docsRoot(sfDir)}#v1"
+  private def lmStatsKey(sfDir: String) = s"lm-stats#${docsRoot(sfDir)}#v1"
 
   /** Cold-soak seam for the DISK layer (the session seam is
     * [[clearLmCache]]): a true cold LM build must rebuild the stored
@@ -1777,15 +1781,15 @@ object TextOps {
   private[graft] def lmSurprisalFrame(spark: SparkSession, sfDir: String): DataFrame =
     surprisalCache.synchronized {
       surprisalCache.filterInPlace { case (_, (_, sc)) => !sc.isStopped }
-      surprisalCache.get(sfDir) match {
+      surprisalCache.get(docsRoot(sfDir)) match {
         case Some((s, sc)) if sc eq spark.sparkContext => s
         case _ =>
-          val s = graft.plans.FrameStore.serveOrBuild(spark,
-            lmStoreKey(sfDir),
-            graft.Tables.snapshot(spark, sfDir, "documents").entries) {
+          val stored = graft.plans.FrameStore.serveOrBuild(spark,
+            lmStoreKey(sfDir), sfDir, "documents") {
             lmSurprisalBuild(spark, sfDir)
           }
-          surprisalCache.put(sfDir, (s, spark.sparkContext))
+          val s = spark.read.parquet(stored.dir)
+          surprisalCache.put(docsRoot(sfDir), (s, spark.sparkContext))
           s
       }
     }

@@ -17,14 +17,11 @@ import graft.Tables
   * production the directory is an object-store prefix and the manifest
   * comparison is a catalog snapshot-id check.
   *
-  * Two maintenance disciplines share the manifest: [[serveOrBuild]]
-  * (whole frames, served or rebuilt; introspectable through
-  * [[lastAction]]) and [[refresh]] (append-decomposable frames, which
-  * also take a delta for appended source files and return their
-  * [[Outcome]]). */
+  * Two maintenance disciplines share the manifest and report their
+  * [[Outcome]]: [[serveOrBuild]] (whole frames, served or rebuilt) and
+  * [[refresh]] (append-decomposable frames, which also take a delta for
+  * appended source files). */
 object FrameStore {
-  @volatile private[graft] var lastAction: String = ""
-
   private def tmpDir(name: String) =
     new java.io.File(sys.props("java.io.tmpdir"), name)
 
@@ -68,30 +65,33 @@ object FrameStore {
   private[graft] def lockFor(key: String): Object =
     keyLocks.getOrElseUpdate(key, new Object)
 
-  /** Serve the frame off disk when its manifest matches the current
-    * source entries; otherwise run `build`, overwrite the directory,
-    * then commit the manifest. Build-then-manifest ordering makes a
-    * crash between the two a plain rebuild on the next call, never a
-    * stale serve. The returned frame is the parquet read either way, so
-    * serve and rebuild hand consumers the identical plan shape. */
-  def serveOrBuild(spark: SparkSession, key: String, entries: Seq[String])
-                  (build: => DataFrame): DataFrame =
+  /** Serve the frame stored under `key` when its manifest matches the
+    * snapshot of table `name` of `sfDir`; otherwise run `build`,
+    * overwrite the directory, then commit the manifest. Build-then-
+    * manifest ordering makes a crash between the two a plain rebuild on
+    * the next call, never a stale serve. Consumers read the frame from
+    * the returned dir either way, so serve and rebuild hand them the
+    * identical plan shape. */
+  def serveOrBuild(spark: SparkSession, key: String, sfDir: String, name: String)
+                  (build: => DataFrame): Refreshed =
     lockFor(key).synchronized {
       val dir = dirFor(key)
+      val snap = Tables.snapshot(spark, sfDir, name)
       val p = new Path(dir)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (readManifest(fs, p) == entries) {
-        lastAction = s"served:$key"
-      } else {
+      val prev = readManifest(fs, p)
+      val outcome =
+        if (prev == snap.entries) Served
+        else Rebuilt(snap.files, if (prev.isEmpty) "no manifest" else "files changed or removed")
+      if (outcome != Served) {
         build.write.mode("overwrite").parquet(dir)
-        writeManifest(fs, p, entries)
-        lastAction = s"rebuilt:$key"
+        writeManifest(fs, p, snap.entries)
       }
-      spark.read.parquet(dir)
+      Refreshed(dir, snap, outcome)
     }
 
-  /** What a [[refresh]] did, with the snapshot entries' relative paths
-    * it built from. */
+  /** What a [[serveOrBuild]] or [[refresh]] did, with the snapshot
+    * entries' relative paths it built from. */
   sealed trait Outcome { def files: Seq[String] }
   /** The manifest matched the snapshot: nothing was built. */
   case object Served extends Outcome { def files: Seq[String] = Nil }

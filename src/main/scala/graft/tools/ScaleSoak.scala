@@ -29,7 +29,7 @@ object ScaleSoak {
     // pinned shingle/signature/pair frames — the LM-catalog evidence
     // shape applied to the dd family
     "dd_ngram_jaccard", "dd_minhash_lsh", "dd_dup_clusters",
-    "dd_dup_clusters_star", "dd_lsh_quality", "dd_span_audit",
+    "dd_lsh_quality", "dd_span_audit",
     // the durable-catalog serving path: publish-once (bucketed table,
     // cold includes the publish) + in-place verify joins
     "dd_published_pairs",

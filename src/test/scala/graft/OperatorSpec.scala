@@ -926,23 +926,36 @@ class OperatorSpec extends AnyFunSuite {
       (10L, 10L, 2L, 1L), (11L, 10L, 2L, 0L)))
   }
 
-  test("star-contraction CC equals min-label CC: chains, stars, and the real pair graph") {
+  test("min-label CC equals driver union-find: chains, stars, and the real pair graph") {
     import spark.implicits._
-    // long chain (the min-label worst case star-contraction exists for),
-    // a star, an isolated pair — all must label at the component min
+    // reference labels: union-find that always hangs the larger root
+    // under the smaller, so every root is its component's minimum
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(n => n -> find(n)).toMap
+    }
+    // long chain (the min-label worst case: one hop per round), a star,
+    // an isolated pair — all must label at the component min
     val chain = (1L until 16L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (100L, 102L), (100L, 103L), (200L, 201L))
-    val pairs = chain.toDF("doc_a", "doc_b")
-    val star = DedupOps.ccLabelsStar(pairs).as[(Long, Long)].collect().toMap
-    val minLabel = DedupOps.ccLabels(pairs).as[(Long, Long)].collect().toMap
-    assert(star == minLabel)
-    (1L to 16L).foreach(i => assert(star(i) == 1L, s"chain node $i"))
-    // and on the REAL near-dup pair graph both engines agree exactly
+    val minLabel = DedupOps.ccLabels(chain.toDF("doc_a", "doc_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(minLabel == unionFind(chain))
+    (1L to 16L).foreach(i => assert(minLabel(i) == 1L, s"chain node $i"))
+    // and on the REAL near-dup pair graph
     val realPairs = DedupOps.minhashLshPairs(spark, sf0001)
       .select("doc_a", "doc_b").localCheckpoint()
-    val starReal = DedupOps.ccLabelsStar(realPairs).as[(Long, Long)].collect().toMap
     val minReal = DedupOps.ccLabels(realPairs).as[(Long, Long)].collect().toMap
-    assert(starReal == minReal)
+    assert(minReal.nonEmpty)
+    assert(minReal == unionFind(realPairs.as[(Long, Long)].collect().toSeq))
   }
 
   test("linkage block sweep: widened key bounds blocks past 10^4 rows, accuracy unchanged") {
@@ -4509,20 +4522,31 @@ class OperatorSpec extends AnyFunSuite {
     assert(first.collect().sortBy(key).map(_.toString).toSeq == fresh)
   }
 
+  /** Data files (name → mtime) of the frame store under `key`: a serve
+    * leaves them as they are, a rebuild writes new ones. */
+  private def storeDataFiles(key: String): Map[String, Long] =
+    Option(new java.io.File(graft.plans.FrameStore.dirFor(key)).listFiles()).toSeq.flatten
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => f.getName -> f.lastModified()).toMap
+
   test("durable LM catalog: a fresh session serves the scored frame off disk, bit-identical to a scratch build") {
     // r13 verdict #5: the localCheckpoint pin died with the JVM; the
     // FrameStore layer must survive a session-cache clear (the
     // fresh-JVM proxy) and serve — introspectably — without a rebuild
+    val key = TextOps.lmStoreKey(sf0001)
     TextOps.purgeLmStore(sf0001)
     TextOps.clearLmCache()
+    assert(storeDataFiles(key).isEmpty)
     val first = TextOps.lmSurprisalFrame(spark, sf0001)
-    assert(graft.plans.FrameStore.lastAction.startsWith("rebuilt:lm-surprisal"),
-      s"first consumer must rebuild, got ${graft.plans.FrameStore.lastAction}")
+    val built = storeDataFiles(key)
+    assert(built.nonEmpty, "first consumer must rebuild the store")
     val rows = first.collect().map(_.toString).sorted.toSeq
     TextOps.clearLmCache() // session gone, disk intact
     val second = TextOps.lmSurprisalFrame(spark, sf0001)
-    assert(graft.plans.FrameStore.lastAction.startsWith("served:lm-surprisal"),
-      s"post-clear consumer must SERVE, got ${graft.plans.FrameStore.lastAction}")
+    assert(storeDataFiles(key) == built, "post-clear consumer must SERVE, not rewrite")
+    assert(graft.plans.FrameStore.serveOrBuild(spark, key, sf0001, "documents") {
+      fail("an unchanged corpus must not rebuild")
+    }.outcome == graft.plans.FrameStore.Served)
     assert(second.collect().map(_.toString).sorted.toSeq == rows,
       "served frame diverged from the built frame")
     assert(rows == TextOps.lmSurprisalBuild(spark, sf0001)
@@ -4573,16 +4597,20 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("durable kNN catalog: a fresh session serves the graph off disk, bit-identical to a scratch build") {
+    val key = SimilarityOps.knnStoreKey(sf0001, 4, 8, 0)
     SimilarityOps.purgeKnnStore(sf0001)
     SimilarityOps.clearKnnIndexCache()
+    assert(storeDataFiles(key).isEmpty)
     val first = SimilarityOps.knnGraphIndex(spark, sf0001)
-    assert(graft.plans.FrameStore.lastAction.startsWith("rebuilt:knn-graph"),
-      s"first consumer must rebuild, got ${graft.plans.FrameStore.lastAction}")
+    val built = storeDataFiles(key)
+    assert(built.nonEmpty, "first consumer must rebuild the store")
     val rows = first.collect().map(_.toString).sorted.toSeq
     SimilarityOps.clearKnnIndexCache() // session gone, disk intact
     val second = SimilarityOps.knnGraphIndex(spark, sf0001)
-    assert(graft.plans.FrameStore.lastAction.startsWith("served:knn-graph"),
-      s"post-clear consumer must SERVE, got ${graft.plans.FrameStore.lastAction}")
+    assert(storeDataFiles(key) == built, "post-clear consumer must SERVE, not rewrite")
+    assert(graft.plans.FrameStore.serveOrBuild(spark, key, sf0001, "embeddings") {
+      fail("an unchanged embeddings table must not rebuild")
+    }.outcome == graft.plans.FrameStore.Served)
     assert(second.collect().map(_.toString).sorted.toSeq == rows,
       "served graph diverged from the built graph")
     assert(rows == SimilarityOps.knnGraph(spark, sf0001)

@@ -507,7 +507,7 @@ class SourceSinkSpec extends AnyFunSuite {
       import org.apache.spark.sql.execution.FileSourceScanExec
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       val pubLoc = graft.plans.FrameStore
-        .dirFor(s"dd-published#${SparkFixture.sf0001}#v1")
+        .dirFor(graft.operators.DedupOps.publishedStoreKey(SparkFixture.sf0001))
       def isPub(p: org.apache.spark.sql.execution.SparkPlan): Boolean = p match {
         case f: FileSourceScanExec =>
           f.relation.location.rootPaths.exists(_.toString.contains(pubLoc))
@@ -547,7 +547,7 @@ class SourceSinkSpec extends AnyFunSuite {
       // the existing bucketed files (metadata-only DDL, zero rewrite:
       // data file mtimes unchanged), same rows, still bucket-served
       val locStr = graft.plans.FrameStore
-        .dirFor(s"dd-published#${SparkFixture.sf0001}#v1")
+        .dirFor(graft.operators.DedupOps.publishedStoreKey(SparkFixture.sf0001))
       def dataMtimes(): Map[String, Long] =
         new java.io.File(locStr).listFiles()
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))

@@ -74,6 +74,40 @@ class TableSnapshotSpec extends AnyFunSuite {
     TextIndexCatalog.clear()
   }
 
+  test("a bare path and a file: URI share one LM, kNN, published and media store") {
+    import graft.operators.{DedupOps, MultimodalOps, SimilarityOps, TextOps}
+    val tmp = Files.createTempDirectory("graft-snap-stores").toString
+    Seq("documents", "embeddings").foreach(n => Files.copy(
+      Paths.get(SparkFixture.sf0001, s"$n.parquet"), Paths.get(tmp, s"$n.parquet")))
+    val uri = s"file://$tmp"
+    // each store is built through the bare path, then asked for through
+    // the URI: the second call must find the first one's copy
+    val lm = TextOps.ensureLmStats(spark, tmp)
+    assert(lm.outcome.isInstanceOf[FrameStore.Rebuilt], s"first LM-stats call: ${lm.outcome}")
+    val lmUri = TextOps.ensureLmStats(spark, uri)
+    assert(lmUri.dir == lm.dir && lmUri.outcome == FrameStore.Served,
+      s"LM stats: ${lm.dir} then ${lmUri.dir} (${lmUri.outcome})")
+    SimilarityOps.clearKnnIndexCache()
+    val knn = SimilarityOps.knnGraphIndex(spark, tmp).inputFiles.toSet
+    SimilarityOps.clearKnnIndexCache()
+    assert(SimilarityOps.knnGraphIndex(spark, uri).inputFiles.toSet == knn,
+      "the kNN graph was stored twice")
+    val tbl = DedupOps.publishedSignatureTable(spark, tmp)
+    assert(DedupOps.publishedSignatureTable(spark, uri) == tbl,
+      "the signature table was published twice")
+    val zone = MultimodalOps.mediaFileDir(spark, tmp, "png")
+    val marker = new java.io.File(zone, "_COMPLETE")
+    val t0 = marker.lastModified()
+    assert(MultimodalOps.mediaFileDir(spark, uri, "png") == zone && marker.lastModified() == t0,
+      "the media zone was written twice")
+    TextOps.purgeLmStore(tmp)
+    SimilarityOps.purgeKnnStore(tmp)
+    SimilarityOps.clearKnnIndexCache()
+    DedupOps.purgePublishedStore(spark, tmp)
+    DedupOps.clearPublishedTables()
+    FrameStore.deleteTree(new java.io.File(zone))
+  }
+
   test("a _temporary tree holding a part file inside documents.parquet is not in the snapshot") {
     val tmp = Files.createTempDirectory("graft-snap-tmp").toString
     val docsDir = s"$tmp/documents.parquet"
