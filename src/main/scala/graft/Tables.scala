@@ -24,7 +24,7 @@ object Tables {
   /** One listing of table `name` under `sfDir`: its qualified root, the
     * visible data files and a version derived from their
     * `relPath:length:mtime` entries. Every staleness check keys on it —
-    * the relation memo, [[rowCount]], the text index and the derived
+    * the session cache ([[memo]]), the text index and the derived
     * frame stores ([[graft.plans.FrameStore]]) — and every registry and
     * cache names the table by [[root]], so a bare path, a relative path
     * and a `file:` URI name one table. A `synth:` table has one constant
@@ -95,7 +95,7 @@ object Tables {
     }
 
   /** The table as of `snap`: a `synth:` table is generated; a parquet
-    * table comes from the resolved-relation memo.
+    * table comes from the `relation` memo.
     *
     * `spark.read.parquet(path)` pays DataSource resolution — file
     * listing, parquet footer schema read, relation construction — on
@@ -105,49 +105,61 @@ object Tables {
     * and serves the cached relation; this memo is that catalog
     * behaviour for the path-loaded driver tables. It caches the resolved
     * DataFrame HANDLE (logical plan + schema + file index) — never rows
-    * or results; every action over it still scans parquet.
-    *
-    * Staleness: keyed by session (a DataFrame is session-bound) and the
-    * snapshot's root, and served only for the snapshot version it was
-    * resolved at, so a table rewritten in place re-resolves instead of
-    * serving a stale file index. */
+    * or results; every action over it still scans parquet. */
   def at(spark: SparkSession, snap: TableSnapshot): DataFrame =
     snap.sfDir match {
       case SynthDir(n, p) =>
         val parts = Option(p).map(_.toInt)
           .getOrElse(spark.sparkContext.defaultParallelism)
         synthTable(spark, snap.name, n.toLong, parts)
-      case _ =>
-        val perSession = relationCache.synchronized {
-          // cached DataFrames strongly reference their SparkSession, so
-          // the weak keying alone never collects stopped sessions;
-          // evict them explicitly while holding the monitor
-          val it = relationCache.entrySet().iterator()
-          while (it.hasNext)
-            if (it.next().getKey.sparkContext.isStopped) it.remove()
-          var m = relationCache.get(spark)
-          if (m == null) {
-            m = scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)]
-            relationCache.put(spark, m)
-          }
-          m
-        }
-        perSession.get(snap.root) match {
-          case Some((v, df)) if v == snap.version => df
-          case _ =>
-            val df = spark.read.parquet(snap.root)
-            perSession.put(snap.root, (snap.version, df))
-            df
-        }
+      case _ => memo(spark, snap, "relation")(spark.read.parquet(snap.root))
     }
 
-  /** Weak-keyed by session: a stopped session's cached relations must
-    * never be served to a new session (a DataFrame is bound to the
-    * session that resolved it), and the entry must not pin the old
-    * session in memory across a long test JVM. */
-  private val relationCache = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[String, (String, DataFrame)]]
+  /** The one session cache of values derived from a table: resolved
+    * relations, footer row counts, pinned (`localCheckpoint`) frames
+    * and handles on derived stores.
+    *
+    *  - Key: (session, `snap.root`, `kind`). A DataFrame is bound to
+    *    the session that made it, so no entry is served to another.
+    *  - Staleness: an entry is served only while `snap.version` is the
+    *    version it was built at; a new version replaces it, so a table
+    *    rewritten in place rebuilds and entries never pile up.
+    *  - Concurrency: the build runs under its entry's lazy-val lock, so
+    *    racing first builds of one key coalesce into one, while builds
+    *    of other keys run in parallel.
+    *  - Eviction: entries of stopped sessions are swept on every call
+    *    (a cached DataFrame pins its session, so nothing weaker would
+    *    let it go); [[clear]] drops kinds for a cold rebuild. */
+  private[graft] def memo[T](spark: SparkSession, snap: TableSnapshot, kind: String)
+                            (build: => T): T = {
+    memos.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
+    val key = (spark, snap.root, kind)
+    @annotation.tailrec
+    def entry(): MemoEntry = {
+      val fresh = new MemoEntry(snap.version, () => build)
+      memos.putIfAbsent(key, fresh) match {
+        case None => fresh
+        case Some(live) if live.version == snap.version => live
+        case Some(stale) => if (memos.replace(key, stale, fresh)) fresh else entry()
+      }
+    }
+    entry().value.asInstanceOf[T]
+  }
+
+  /** Drop every memo entry whose kind is one of `kinds` or belongs to
+    * one of them as a family (`dedup` covers `dedup:shingles`): the
+    * cold-build seam for soaks and specs. */
+  private[graft] def clear(kinds: String*): Unit =
+    memos.filterInPlace { case ((_, _, k), _) =>
+      !kinds.exists(f => k == f || k.startsWith(f + ":"))
+    }
+
+  private final class MemoEntry(val version: String, build: () => Any) {
+    lazy val value: Any = build()
+  }
+
+  private val memos = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), MemoEntry]
 
   /** `sfDir = "synth:<nDocs>[:<partitions>]"` swaps the parquet corpus
     * for a SCAN-TIME synthetic twin — the scale-soak seam: corpus size
@@ -328,11 +340,11 @@ object Tables {
     * (the generators above are `spark.range`-shaped); parquet tables
     * read it from file FOOTERS (row counts are parquet block metadata
     * — the same numbers a Hive/Delta catalog serves from its
-    * manifest), summed driver-side and cached per path for the
-    * session. Zero Spark jobs either way. Exactness matters: the
-    * committed kNN oracles render `autoBits` from `count(*)`, so this
-    * must equal the scan count — footer totals are exact by the
-    * parquet spec (every writer records block row counts). */
+    * manifest), summed driver-side in the `row_count` memo. Zero
+    * Spark jobs either way. Exactness matters: the committed kNN
+    * oracles render `autoBits` from `count(*)`, so this must equal the
+    * scan count — footer totals are exact by the parquet spec (every
+    * writer records block row counts). */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long = sfDir match {
     case SynthDir(n, _) => name match {
       case "documents"  => n.toLong
@@ -340,26 +352,15 @@ object Tables {
       case other => sys.error(s"synth: tables exist only for documents/embeddings, got $other")
     }
     case _ =>
-      // validated on the snapshot version, keyed by root: a table
-      // rewritten in-session must re-read footers, not serve the stale
-      // sum — and the rewrite replaces the prior entry instead of
-      // growing the cache across long sessions of repeated publishes
       val snap = snapshot(spark, sfDir, name)
-      rowCountCache.get(snap.root) match {
-        case Some((v, n)) if v == snap.version => n
-        case _ =>
-          val conf = spark.sessionState.newHadoopConf()
-          val n = snap.statuses.iterator.map { s =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(s, conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }.sum
-          rowCountCache.put(snap.root, (snap.version, n))
-          n
+      memo(spark, snap, "row_count") {
+        val conf = spark.sessionState.newHadoopConf()
+        snap.statuses.iterator.map { s =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(s, conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try r.getRecordCount finally r.close()
+        }.sum
       }
   }
-
-  private val rowCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
 }

@@ -882,46 +882,19 @@ object MultimodalOps {
 
   // ────────────── perceptual tiers over REAL ON-DISK FILES ──────────────
 
-  /** Resolved-relation memo for the landing-zone binaryFile reads —
-    * the [[graft.Tables]] `resolved` discipline (r15, guide §7.3
-    * driver-side work): `spark.read.format("binaryFile").load` pays a
-    * fresh driver-side file listing + relation construction of ~6 k
-    * file entries on EVERY call (~0.3-0.5 s at sf0.1, ×3 queries ×3
-    * sweeps), yet the zone only changes when it is rebuilt. Keyed by
-    * (dir, glob, `_COMPLETE` mtime) so a rebuilt zone re-resolves;
-    * weak-keyed by session so a stopped session's relations are never
-    * served. Caches the DataFrame HANDLE only — every action still
-    * reads the files. */
-  private val binarySourceCache = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[(String, String, Long), DataFrame]]
-
-  private def binaryFiles(spark: SparkSession, dir: String,
-                          glob: String): DataFrame = {
-    // staleness key: the SOURCE MANIFEST's content hash, not one file's
-    // mtime (r15 advice: coarse filesystem timestamps can let an
-    // in-session zone rebuild collide with the old _COMPLETE mtime and
-    // serve a stale file index) — the manifest is rewritten on every
-    // rebuild with the corpus's name:length:mtime entries, so its bytes
-    // change whenever the zone contents can have
-    val fp = java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, "_source_manifest").toPath)).toLong
-    val perSession = binarySourceCache.synchronized {
-      // a cached DataFrame strongly references its SparkSession, so the
-      // weak keying alone never collects stopped sessions (r15 advice);
-      // evict them explicitly — the publishedTables filterInPlace idiom
-      val it = binarySourceCache.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getKey.sparkContext.isStopped) it.remove()
-      var m = binarySourceCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[(String, String, Long), DataFrame]
-        binarySourceCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate((dir, glob, fp),
+  /** The landing zone of `kind` read through Spark's `binaryFile`
+    * source, as the `media:<kind>:<glob>` entry of
+    * [[graft.Tables.memo]] on the documents snapshot the zone was
+    * validated against (r15, guide §7.3 driver-side work):
+    * `spark.read.format("binaryFile").load` pays a fresh driver-side
+    * file listing + relation construction of ~6 k file entries on EVERY
+    * call (~0.3-0.5 s at sf0.1, ×3 queries ×3 sweeps), yet the zone
+    * only changes when the corpus does. Caches the DataFrame HANDLE
+    * only — every action still reads the files. */
+  private def mediaFiles(spark: SparkSession, sfDir: String, kind: String,
+                         glob: String): DataFrame = {
+    val (dir, snap) = mediaZone(spark, sfDir, kind)
+    graft.Tables.memo(spark, snap, s"media:$kind:$glob") {
       // coalesce to core count (guide §6 small files): binaryFile
       // charges each tiny file the 4 MB open cost, planning ~380 scan
       // tasks for ~6 k files at sf0.1 — per-task launch overhead
@@ -930,7 +903,8 @@ object MultimodalOps {
       // defaultParallelism, never a local constant.
       spark.read.format("binaryFile")
         .option("pathGlobFilter", glob).load(dir)
-        .coalesce(spark.sparkContext.defaultParallelism))
+        .coalesce(spark.sparkContext.defaultParallelism)
+    }
   }
 
   /** Write-once landing zone for the [[dhashPxFilePairs]] /
@@ -949,15 +923,21 @@ object MultimodalOps {
     * not serve stale payload files). Completion order is files →
     * `_source_manifest` → `_COMPLETE`, so a partial directory from a
     * killed run always re-validates as stale and rebuilds. */
-  private[graft] def mediaFileDir(spark: SparkSession, sfDir: String,
-                                  kind: String): String = {
+  private[graft] def mediaFileDir(spark: SparkSession, sfDir: String, kind: String): String =
+    mediaZone(spark, sfDir, kind)._1
+
+  /** [[mediaFileDir]] with the documents snapshot it was validated
+    * against. */
+  private def mediaZone(spark: SparkSession, sfDir: String,
+                        kind: String): (String, graft.Tables.TableSnapshot) = {
     import graft.plans.FrameStore
     val corpusKey = FrameStore.sha1Hex(graft.Tables.rootOf(sfDir, "documents")).take(16)
     val base = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_media_${corpusKey}_$kind")
     // per-zone lock: unrelated zones must not serialize behind one monitor
     FrameStore.lockFor(base.getAbsolutePath).synchronized {
-      val entries = graft.Tables.snapshot(spark, sfDir, "documents").entries
+      val snap = graft.Tables.snapshot(spark, sfDir, "documents")
+      val entries = snap.entries
       val basePath = new org.apache.hadoop.fs.Path(base.getAbsolutePath)
       val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
       val current = new java.io.File(base, "_COMPLETE").exists() &&
@@ -982,7 +962,7 @@ object MultimodalOps {
         FrameStore.writeManifest(fs, basePath, entries, "_source_manifest")
         new java.io.File(base, "_COMPLETE").createNewFile()
       }
-      base.getAbsolutePath
+      (base.getAbsolutePath, snap)
     }
   }
 
@@ -999,8 +979,7 @@ object MultimodalOps {
     * (identical files ⇒ identical pairs): shares its oracle verbatim. */
   def dhashPxFilePairs(spark: SparkSession, sfDir: String,
                        maxHamming: Int = 3): DataFrame = {
-    val dir = mediaFileDir(spark, sfDir, "png")
-    val hashed = binaryFiles(spark, dir, "*.png")
+    val hashed = mediaFiles(spark, sfDir, "png", "*.png")
       .select(
         regexp_extract(col("path"), "(\\d+)\\.png$", 1)
           .cast("long").as("doc_id"),
@@ -1015,8 +994,7 @@ object MultimodalOps {
     * disk too. */
   def wavFpFilePairs(spark: SparkSession, sfDir: String,
                      maxHamming: Int = 3): DataFrame = {
-    val dir = mediaFileDir(spark, sfDir, "wav")
-    val hashed = binaryFiles(spark, dir, "*.wav")
+    val hashed = mediaFiles(spark, sfDir, "wav", "*.wav")
       .select(
         regexp_extract(col("path"), "(\\d+)\\.wav$", 1)
           .cast("long").as("doc_id"),
@@ -1035,8 +1013,7 @@ object MultimodalOps {
     * pairs). */
   def dhashInflateFilePairs(spark: SparkSession, sfDir: String,
                             maxHamming: Int = 3): DataFrame = {
-    val dir = mediaFileDir(spark, sfDir, "pngmix")
-    val hashed = binaryFiles(spark, dir, "*.png")
+    val hashed = mediaFiles(spark, sfDir, "pngmix", "*.png")
       .select(
         regexp_extract(col("path"), "(\\d+)\\.png$", 1)
           .cast("long").as("doc_id"),

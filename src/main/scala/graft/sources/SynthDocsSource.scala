@@ -94,17 +94,6 @@ object SynthDocs {
     s"alpha tok${id % 97} tok${id * 31 % 89} tok${id * 7 % 83} end"
 }
 
-/** Spec observability: what the LAST build planned — partitions after
-  * pruning, the pruned read schema, and which filters were pushed.
-  * Session-scoped mutable cells, same spirit as
-  * [[graft.tools.SkewEvidence]]. */
-object SynthDocsRegistry {
-  @volatile var lastPlannedPartitions: Int = -1
-  @volatile var lastReadColumns: Seq[String] = Seq.empty
-  @volatile var lastPushed: Seq[String] = Seq.empty
-  @volatile var lastAggPushed: Seq[String] = Seq.empty
-}
-
 final class SynthDocsTable(rows: Long, partitions: Int,
                            maxRowsPerTrigger: Long = 100L)
     extends Table with SupportsRead {
@@ -229,7 +218,7 @@ final class SynthDocsScan(rows: Long, partitions: Int, required: StructType,
     // non-overlapping partitions vanish at PLANNING time (the generator
     // twin of partition pruning), survivors are clipped at read time
     val per = math.max(1L, (rows + partitions - 1) / partitions)
-    val parts = (0 until partitions).iterator
+    (0 until partitions).iterator
       .map { k =>
         val s = k * per
         val e = math.min(rows, s + per)
@@ -239,11 +228,6 @@ final class SynthDocsScan(rows: Long, partitions: Int, required: StructType,
         SynthDocsPartition(s, e): InputPartition
       }
       .toArray
-    SynthDocsRegistry.lastPlannedPartitions = parts.length
-    SynthDocsRegistry.lastReadColumns = required.fieldNames.toSeq
-    SynthDocsRegistry.lastPushed = pushedDesc
-    SynthDocsRegistry.lastAggPushed = aggCols
-    parts
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

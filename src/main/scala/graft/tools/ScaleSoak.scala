@@ -25,7 +25,7 @@ object ScaleSoak {
     // dedup ladder (span audit rides the exact-substr gram window;
     // dhash is the multimodal perceptual tier — banded like minhash).
     // r13: cold pays the session dedup-signature-catalog build
-    // (clearDedupCache below), warm is the overlay served off the
+    // (its memo entries cleared below), warm is the overlay served off the
     // pinned shingle/signature/pair frames — the LM-catalog evidence
     // shape applied to the dd family
     "dd_ngram_jaccard", "dd_minhash_lsh", "dd_dup_clusters",
@@ -52,7 +52,7 @@ object ScaleSoak {
     "art_search_phrase_idx", "art_search_stemmed_idx",
     "art_search_snippet_idx",
     // the bigram-LM family: cold pays the session LM-catalog build
-    // (clearLmCache above), warm is the overlay served off the pinned
+    // (its memo entry cleared below), warm is the overlay served off the pinned
     // per-doc surprisal frame — the r12 build-once evidence
     "txt_lm_surprisal", "txt_perplexity_buckets", "txt_doremi_step",
     // the durable-stats serving path (LSM generations merged at read)
@@ -170,10 +170,7 @@ object ScaleSoak {
           (secs, jobCount.get() - j0, (jobNanos.get() - n0) / 1e9)
         }
         (1 to reps).foreach { _ =>
-          graft.operators.SimilarityOps.clearKnnIndexCache()
-          graft.operators.TextOps.clearLmCache()
-          graft.operators.DedupOps.clearDedupCache()
-          graft.operators.DedupOps.clearPublishedTables()
+          graft.Tables.clear("knn", "lm_surprisal", "dedup", "dd_published")
           // the DISK layer under the session catalogs: purged so cold
           // includes the durable build+write — except under
           // SOAK_KEEP_STORES=1, the durable-overlay measurement seam

@@ -15,6 +15,30 @@ class SourceSinkSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** The synthdocs scan in the plan `ds` executed. Under AQE the scan
+    * sits inside materialized QueryStageExec nodes, which are LEAVES of
+    * the final plan's tree — recurse through each stage's inner plan. */
+  private def synthScan(ds: org.apache.spark.sql.Dataset[_])
+      : org.apache.spark.sql.execution.datasources.v2.BatchScanExec = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def scans(p: SparkPlan): Seq[BatchScanExec] = p.collect {
+      case b: BatchScanExec => Seq(b)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+    }.flatten
+    scans(ds.queryExecution.executedPlan).head
+  }
+
+  /** A `key=[a,b]` field of the synthdocs scan description: the read
+    * `columns`, the `pushed` filters or the pushed `aggs`. */
+  private def scanField(ds: org.apache.spark.sql.Dataset[_], key: String): Seq[String] = {
+    val desc = synthScan(ds).scan.description()
+    val v = s"$key=\\[([^\\]]*)\\]".r.findFirstMatchIn(desc).get.group(1)
+    if (v.isEmpty) Seq.empty else v.split(",").toSeq
+  }
+
   test("O1 seed scan: read a URL list file, trim, drop blanks") {
     import spark.implicits._
     val f = Files.createTempFile("seeds", ".lst")
@@ -29,13 +53,14 @@ class SourceSinkSpec extends AnyFunSuite {
 
   test("synthdocs DSv2 source: deterministic rows, partition pruning, column pruning") {
     import spark.implicits._
-    import graft.sources.{SynthDocs, SynthDocsRegistry}
+    import graft.sources.SynthDocs
     def read() = spark.read.format("synthdocs")
       .option("rows", 5000).option("partitions", 16).load()
     // full scan: every row, generated to the fixed formula
-    val full = read().as[(Long, String, String)].collect()
+    val fullDs = read().as[(Long, String, String)]
+    val full = fullDs.collect()
     assert(full.length == 5000)
-    assert(SynthDocsRegistry.lastPlannedPartitions == 16)
+    assert(synthScan(fullDs).inputPartitions.length == 16)
     val sample = full.find(_._1 == 1234L).get
     assert(sample._2 == SynthDocs.sourceOf(1234L))
     assert(sample._3 == SynthDocs.textOf(1234L))
@@ -43,20 +68,21 @@ class SourceSinkSpec extends AnyFunSuite {
     // 5000 rows / 16 partitions = 313-row ranges; [1200, 3800) overlaps
     // exactly ranges 3..12 → 10 planned, and every returned row is
     // in-bounds (the pushed filters also re-evaluate as residuals)
-    val sliced = read()
+    val slicedDs = read()
       .filter(col("doc_id") >= 1200 && col("doc_id") < 3800)
-      .as[(Long, String, String)].collect()
+      .as[(Long, String, String)]
+    val sliced = slicedDs.collect()
     assert(sliced.length == 2600)
     assert(sliced.forall(r => r._1 >= 1200 && r._1 < 3800))
-    assert(SynthDocsRegistry.lastPlannedPartitions == 10,
-      s"expected 10 surviving ranges, planned ${SynthDocsRegistry.lastPlannedPartitions}")
-    assert(SynthDocsRegistry.lastPushed.nonEmpty, "doc_id bounds must push down")
+    val planned = synthScan(slicedDs).inputPartitions.length
+    assert(planned == 10, s"expected 10 surviving ranges, planned $planned")
+    assert(scanField(slicedDs, "pushed").nonEmpty, "doc_id bounds must push down")
     // column pruning reaches the generator: a doc_id-only projection
     // never asks the reader for text
-    assert(read().select("doc_id").as[Long].collect().sum ==
-      (0L until 5000L).sum)
-    assert(SynthDocsRegistry.lastReadColumns == Seq("doc_id"),
-      s"text synthesized for a pruned scan: ${SynthDocsRegistry.lastReadColumns}")
+    val idsDs = read().select("doc_id").as[Long]
+    assert(idsDs.collect().sum == (0L until 5000L).sum)
+    assert(scanField(idsDs, "columns") == Seq("doc_id"),
+      s"text synthesized for a pruned scan: ${scanField(idsDs, "columns")}")
   }
 
   test("synthdocs DSv2 micro-batch stream: admission-controlled triggers, checkpoint restart resumes the offset") {
@@ -93,7 +119,7 @@ class SourceSinkSpec extends AnyFunSuite {
 
   test("synthdocs DSv2 aggregate pushdown: COUNT/MIN/MAX from range arithmetic, one row per partition") {
     import spark.implicits._
-    import graft.sources.{SynthDocs, SynthDocsRegistry}
+    import graft.sources.SynthDocs
     val df = SynthDocs.corpusSizing(spark, rows = 200000, partitions = 32)
     // collect df ITSELF (not a derived .as dataset — that would execute
     // a different QueryExecution and leave df's scan metrics at zero)
@@ -101,36 +127,21 @@ class SourceSinkSpec extends AnyFunSuite {
     assert((row.getLong(0), row.getLong(1), row.getLong(2)) ==
       ((200000L, 0L, 199999L)))
     // the agg reached the source: the scan read the summary schema
-    assert(SynthDocsRegistry.lastAggPushed ==
+    assert(scanField(df, "aggs") ==
       Seq("count_star", "min_doc_id", "max_doc_id"),
-      s"agg not pushed: ${SynthDocsRegistry.lastAggPushed}")
-    // and only one summary row per partition crossed the scan boundary.
-    // Under AQE the scan sits inside materialized QueryStageExec nodes,
-    // which are LEAVES of the final plan's tree — recurse through each
-    // stage's inner plan to reach the BatchScanExec metrics
-    val fin = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
-      p.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          Seq(b)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          scans(q.plan)
-      }.flatten
-    val scanRows = scans(fin).headOption.map(_.metrics("numOutputRows").value)
-    assert(scanRows.contains(32L),
+      s"agg not pushed: ${scanField(df, "aggs")}")
+    // and only one summary row per partition crossed the scan boundary
+    val scanRows = synthScan(df).metrics("numOutputRows").value
+    assert(scanRows == 32L,
       s"expected 32 partition-summary rows off the scan, got $scanRows")
     // an aggregate the source can't answer (min over a synthesized
     // column) must NOT push — and still be correct via the row path
-    val fallback = spark.read.format("synthdocs")
+    val fallbackDs = spark.read.format("synthdocs")
       .option("rows", 5000).option("partitions", 8).load()
       .agg(min(col("source")).as("min_src"))
-      .as[String].collect().head
-    assert(SynthDocsRegistry.lastAggPushed.isEmpty,
+      .as[String]
+    val fallback = fallbackDs.collect().head
+    assert(scanField(fallbackDs, "aggs").isEmpty,
       "min(source) must not push into the generator")
     assert(fallback == "synth0")
     // grouped aggregation likewise stays on the row path
@@ -138,7 +149,7 @@ class SourceSinkSpec extends AnyFunSuite {
       .option("rows", 5000).option("partitions", 8).load()
       .groupBy("source").agg(count(lit(1)).as("n"))
     assert(grouped.collect().length == 5)
-    assert(SynthDocsRegistry.lastAggPushed.isEmpty,
+    assert(scanField(grouped, "aggs").isEmpty,
       "grouped agg must not push into the generator")
   }
 
@@ -556,7 +567,7 @@ class SourceSinkSpec extends AnyFunSuite {
       assert(before.nonEmpty)
       val rowsBefore = spark.table(t1).collect().map(_.toString).sorted.toSeq
       spark.sql(s"DROP TABLE $t1") // external: files survive
-      graft.operators.DedupOps.clearPublishedTables()
+      graft.Tables.clear("dd_published")
       val t2 = graft.operators.DedupOps
         .publishedSignatureTable(spark, SparkFixture.sf0001)
       assert(t2 == t1)

@@ -100,12 +100,66 @@ class TableSnapshotSpec extends AnyFunSuite {
     val t0 = marker.lastModified()
     assert(MultimodalOps.mediaFileDir(spark, uri, "png") == zone && marker.lastModified() == t0,
       "the media zone was written twice")
+    // the session entries that have no store: one entry per table
+    assert(DedupOps.shingleFrame(spark, tmp) eq DedupOps.shingleFrame(spark, uri),
+      "the dedup shingle frame was built twice")
+    assert(TextOps.bigramCounts(spark, tmp) eq TextOps.bigramCounts(spark, uri),
+      "the bigram counts were built twice")
+    assert(TextOps.bpeTrained(spark, tmp, 1) eq TextOps.bpeTrained(spark, uri, 1),
+      "the BPE merges were trained twice")
     TextOps.purgeLmStore(tmp)
     SimilarityOps.purgeKnnStore(tmp)
     SimilarityOps.clearKnnIndexCache()
     DedupOps.purgePublishedStore(spark, tmp)
-    DedupOps.clearPublishedTables()
+    Tables.clear("dd_published")
     FrameStore.deleteTree(new java.io.File(zone))
+  }
+
+  test("a table rewritten in place is served its new contents by every session cache") {
+    import graft.operators.{DedupOps, SimilarityOps, TextOps}
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    // each derived value, as its consumer serves it
+    val derived: Seq[(String, String => Seq[String])] = Seq(
+      "ngramJaccardPairs" -> (d => rows(DedupOps.ngramJaccardPairs(spark, d))),
+      "bigramLmCounts" -> (d => rows(TextOps.bigramLmCounts(spark, d))),
+      "bpeMerges" -> (d => rows(TextOps.bpeMerges(spark, d, 2))),
+      "lmSurprisalFrame" -> (d => rows(TextOps.lmSurprisalFrame(spark, d))),
+      "knnGraphIndex" -> (d => rows(SimilarityOps.knnGraphIndex(spark, d))))
+    val same = "xyxy xyxy xyxy xyxy xyxy"
+    val before = Seq((1L, same), (2L, same))
+    // doc 2 gets other text: no near-dup pair, new bigrams, a new top merge
+    val after = Seq((1L, same), (2L, "qrqr qrqr qrqr qrqr qrqr qrqr stst"))
+    val orig = Tables.embeddings(spark, SparkFixture.sf0001)
+    val maxId = orig.agg(max("vec_id")).head().getLong(0)
+    // the rewritten embeddings: the same vectors under mirrored ids
+    def writeEmbeddings(sfDir: String, mirrored: Boolean): Unit =
+      orig.withColumn("vec_id", if (mirrored) lit(maxId) - col("vec_id") else col("vec_id"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$sfDir/embeddings.parquet")
+    val tmp = Files.createTempDirectory("graft-snap-rewrite").toString
+    writeDocs(s"$tmp/documents.parquet", before, "overwrite")
+    writeEmbeddings(tmp, mirrored = false)
+    // a second table holding the rewritten contents from the start: the
+    // answer every cache must give after the rewrite
+    val fresh = Files.createTempDirectory("graft-snap-fresh").toString
+    writeDocs(s"$fresh/documents.parquet", after, "overwrite")
+    writeEmbeddings(fresh, mirrored = true)
+    val old = derived.map { case (name, f) => name -> f(tmp) }.toMap
+    writeDocs(s"$tmp/documents.parquet", after, "overwrite")
+    writeEmbeddings(tmp, mirrored = true)
+    val failures = derived.flatMap { case (name, f) =>
+      val want = f(fresh)
+      val got = f(tmp)
+      if (want == old(name)) Some(s"$name: the rewrite does not change its answer")
+      else if (got != want)
+        Some(s"$name: ${if (got == old(name)) "still serves the old contents" else "wrong answer"}")
+      else None
+    }
+    Seq(tmp, fresh).foreach { d =>
+      TextOps.purgeLmStore(d)
+      SimilarityOps.purgeKnnStore(d)
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
   }
 
   test("a _temporary tree holding a part file inside documents.parquet is not in the snapshot") {
