@@ -71,28 +71,37 @@ object Tables {
     sfDir match {
       case SynthDir(_, _) =>
         new TableSnapshot(sfDir, name, s"$sfDir/$name.parquet", Nil)
-      case _ =>
-        val path = new Path(s"$sfDir/$name.parquet")
-        val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-        val root = fs.makeQualified(path)
-        def walk(dir: Path, prefix: String): Iterator[(String, FileStatus)] = {
-          val children =
-            try fs.listStatus(dir)
-            catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-          children.iterator
-            .filterNot(s => s.getPath.getName.startsWith("_") ||
-              s.getPath.getName.startsWith("."))
-            .flatMap { s =>
-              val rel = prefix + s.getPath.getName
-              if (s.isDirectory) walk(s.getPath, rel + "/") else Iterator(rel -> s)
-            }
-        }
-        val st = fs.getFileStatus(root)
-        val visible =
-          if (st.isDirectory) walk(root, "").toSeq.sortBy(_._1)
-          else Seq(st.getPath.getName -> st)
-        new TableSnapshot(sfDir, name, root.toString, visible)
+      case _ => listed(spark, sfDir, name, new Path(s"$sfDir/$name.parquet"))
     }
+
+  /** The snapshot of a store at `path` outside the `<sfDir>/<name>.parquet`
+    * layout (a derived store such as a text index's postings
+    * directory), by the same walk. */
+  def snapshotAt(spark: SparkSession, path: String): TableSnapshot =
+    listed(spark, path, "", new Path(path))
+
+  private def listed(spark: SparkSession, sfDir: String, name: String,
+                     path: Path): TableSnapshot = {
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(path)
+    def walk(dir: Path, prefix: String): Iterator[(String, FileStatus)] = {
+      val children =
+        try fs.listStatus(dir)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      children.iterator
+        .filterNot(s => s.getPath.getName.startsWith("_") ||
+          s.getPath.getName.startsWith("."))
+        .flatMap { s =>
+          val rel = prefix + s.getPath.getName
+          if (s.isDirectory) walk(s.getPath, rel + "/") else Iterator(rel -> s)
+        }
+    }
+    val st = fs.getFileStatus(root)
+    val visible =
+      if (st.isDirectory) walk(root, "").toSeq.sortBy(_._1)
+      else Seq(st.getPath.getName -> st)
+    new TableSnapshot(sfDir, name, root.toString, visible)
+  }
 
   /** The table as of `snap`: a `synth:` table is generated; a parquet
     * table comes from the `relation` memo.

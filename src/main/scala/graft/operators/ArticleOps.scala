@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.plans.TextIndexCatalog
 import graft.functions.UrlFunctions
 
 /** The reference's article ETL pipeline, Spark-first, over the driver's
@@ -35,7 +36,7 @@ object ArticleOps {
     * refresh compared, so a search lists the table once. */
   private def indexedDocs(spark: SparkSession, sfDir: String,
                           stemmed: Boolean = false): (String, DataFrame) = {
-    val r = graft.plans.TextIndexCatalog.refresh(spark, sfDir, stemmed)
+    val r = TextIndexCatalog.refresh(spark, sfDir, stemmed)
     (r.dir, Tables.at(spark, r.snapshot))
   }
 
@@ -351,12 +352,17 @@ object ArticleOps {
     * filter into a semi-join against the postings table during
     * optimization. The Mongo shape exactly: `create_index` once
     * (api.py:22), then every `$text` search uses it transparently
-    * (api.py:26). A plan spec asserts the index join fires. */
+    * (api.py:26). A plan spec asserts the index join fires.
+    *
+    * The hit page holds at most df(keyword) rows, so it is ordered in
+    * one partition (`coalesce(1)`) rather than range-partitioned: no
+    * sampling job and no shuffle stage. A warm call runs two Spark
+    * jobs, the postings broadcast and the result. */
   def searchIndexed(spark: SparkSession, sfDir: String, keyword: String = "spark"): DataFrame =
     indexedDocs(spark, sfDir)._2
       .filter(array_contains(split(lower(col("text")), " "), keyword.toLowerCase))
       .select("doc_id", "lang", "source", "n_chars")
-      .orderBy("doc_id")
+      .coalesce(1).orderBy("doc_id")
 
   /** Ranked search — the Mongo textScore analogue (api.py:26): multi-term
     * OR match scored by total term frequency (integer-exact, so the
@@ -408,7 +414,7 @@ object ArticleOps {
     require(terms.nonEmpty,
       "phrase search needs at least one non-space token")
     val (idxPath, d) = indexedDocs(spark, sfDir)
-    val cand = spark.read.parquet(idxPath)
+    val cand = TextIndexCatalog.postingsRelation(spark, idxPath)
       .filter(col("term").isin(terms.distinct.toSeq: _*))
       .groupBy("doc_id").agg(countDistinct(col("term")).as("nt"))
       .filter(col("nt") === terms.distinct.length)
@@ -447,7 +453,7 @@ object ArticleOps {
     require(terms.nonEmpty,
       "phrase search needs at least one non-space token")
     val (idxPath, d) = indexedDocs(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = TextIndexCatalog.postingsRelation(spark, idxPath)
     def positionsOf(t: String, shift: Int) =
       post.filter(col("term") === t)
         .select(col("doc_id"), explode(col("positions")).as("p"))
@@ -479,7 +485,7 @@ object ArticleOps {
   def searchFuzzy(spark: SparkSession, sfDir: String,
                   keyword: String = "soft", maxDist: Int = 1): DataFrame = {
     val (idxPath, d) = indexedDocs(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = TextIndexCatalog.postingsRelation(spark, idxPath)
     val cand = post.select("term").distinct()
       .filter(levenshtein(col("term"), lit(keyword.toLowerCase),
         maxDist) =!= -1)
@@ -643,7 +649,7 @@ object ArticleOps {
                        mu: Long = 2000L): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
     val (idxPath, d) = indexedDocs(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = TextIndexCatalog.postingsRelation(spark, idxPath)
     val dl = post.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val tf = post.filter(col("term").isin(kws: _*))
       .select("doc_id", "term", "tf")
@@ -681,7 +687,7 @@ object ArticleOps {
                         keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
     val (idxPath, d) = indexedDocs(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = TextIndexCatalog.postingsRelation(spark, idxPath)
     val dl = post.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
     val tf = post.filter(col("term").isin(kws: _*))
@@ -746,7 +752,7 @@ object ArticleOps {
                            keyword: String = "merge"): DataFrame = {
     val kw = keyword.toLowerCase
     val (idxPath, d) = indexedDocs(spark, sfDir)
-    val hits = spark.read.parquet(idxPath)
+    val hits = TextIndexCatalog.postingsRelation(spark, idxPath)
       .filter(col("term") === kw)
       .select(col("doc_id"),
         (element_at(col("positions"), 1) + 1).cast("long").as("p"))
@@ -872,7 +878,7 @@ object ArticleOps {
   def searchStemmedIndexed(spark: SparkSession, sfDir: String,
                            keyword: String = "merges"): DataFrame = {
     val (idxDir, d) = indexedDocs(spark, sfDir, stemmed = true)
-    val probe = spark.read.parquet(idxDir)
+    val probe = TextIndexCatalog.postingsRelation(spark, idxDir, stemmed = true)
       .filter(col("term") ===
         graft.operators.TextOps.stemToken(lit(keyword.toLowerCase)))
       .select("doc_id")

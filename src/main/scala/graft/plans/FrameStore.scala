@@ -122,8 +122,13 @@ object FrameStore {
     * an older listing. The delta append and the manifest write are two
     * steps; a `_delta_intent` marker written before the append and
     * removed after the manifest commits turns a crash between them into
-    * a full rebuild on the next call, never a double-counted delta. */
-  def refresh(spark: SparkSession, dir: String, sfDir: String, name: String)
+    * a full rebuild on the next call, never a double-counted delta.
+    * `writeOptions` go to both writes (parquet writer settings such as
+    * the page size). The delta reads its files with the table's known
+    * schema, so it runs no schema-inference job; the relation that
+    * schema comes from is the one the next search resolves anyway. */
+  def refresh(spark: SparkSession, dir: String, sfDir: String, name: String,
+              writeOptions: Map[String, String] = Map.empty)
              (build: DataFrame => DataFrame): Refreshed =
     lockFor(dir).synchronized {
       val snap = Tables.snapshot(spark, sfDir, name)
@@ -144,12 +149,14 @@ object FrameStore {
         case Served =>
         case Delta(files) =>
           fs.create(intent, true).close()
-          build(spark.read.parquet(files.map(snap.pathOf): _*))
-            .write.mode("append").parquet(dir)
+          build(spark.read.schema(Tables.at(spark, snap).schema)
+              .parquet(files.map(snap.pathOf): _*))
+            .write.options(writeOptions).mode("append").parquet(dir)
           writeManifest(fs, p, snap.entries)
           fs.delete(intent, false)
         case Rebuilt(_, _) =>
-          build(Tables.at(spark, snap)).write.mode("overwrite").parquet(dir)
+          build(Tables.at(spark, snap))
+            .write.options(writeOptions).mode("overwrite").parquet(dir)
           writeManifest(fs, p, snap.entries)
           fs.delete(intent, false)
       }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Logi
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, collect_list, countDistinct, explode, length, lit, lower, posexplode, sort_array, split}
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Engine-side analogue of Mongo's `create_index([('text','text')])`
@@ -57,14 +57,15 @@ object TextIndexCatalog {
     * directories refresh builds: a skew would turn "cold" soak timings
     * into silent warm index hits.
     *
-    * The layout suffix versions the variant whose SCHEMA changed:
-    * adding the tf (then positions) column to the BASE postings would
-    * otherwise serve an old narrower directory off its manifest to the
-    * ranked/positional paths. The stemmed layout is keyed separately so
-    * a base-layout bump does not needlessly invalidate (and orphan)
-    * existing stemmed directories. */
+    * The layout suffix versions the on-disk layout of each variant: a
+    * schema change (the tf, then positions, column) would otherwise
+    * serve an old narrower directory off its manifest, and a page-size
+    * change ([[PageRows]], `#p2`/`#s2`) would keep serving the old
+    * large pages. The stemmed layout is keyed separately so a
+    * base-only bump does not invalidate (and orphan) stemmed
+    * directories. */
   private def indexDirFor(docsRoot: String, stemmed: Boolean): String =
-    FrameStore.dirFor(docsRoot + (if (stemmed) "#stemmed#s1" else "#p1"),
+    FrameStore.dirFor(docsRoot + (if (stemmed) "#stemmed#s2" else "#p2"),
       "graft-text-index")
 
   /** Delete the ON-DISK index directories for `sfDir` (both variants,
@@ -81,6 +82,38 @@ object TextIndexCatalog {
 
   def lookupStemmed(docsPath: String): Option[String] =
     stemmedIndexes.get(graft.Tables.qualify(docsPath))
+
+  /** Rows per parquet page of a postings file. Each file is sorted by
+    * term, so the pushed `term =` filter skips every page whose
+    * min/max term range misses the keyword (parquet column indexes):
+    * a probe reads about one page per file, not the default 20,000-row
+    * page — the term dictionary over posting lists of the ICDE 2022
+    * compressed-index layout (PAPERS.md). */
+  val PageRows = 2000
+
+  /** The schemas [[postingsOf]] and [[stemmedPostingsOf]] write, as a
+    * parquet read reports them (every field nullable). */
+  private val StemmedSchema =
+    new StructType().add("term", StringType).add("doc_id", LongType)
+  private val PostingsSchema = StemmedSchema
+    .add("tf", LongType).add("positions", ArrayType(IntegerType))
+
+  /** The postings at index directory `dir`, resolved once per index
+    * version: the `postings` entry of the session memo
+    * ([[graft.Tables.memo]]) on the directory's snapshot, read with the
+    * known schema, so neither a repeated probe nor a new delta
+    * generation pays data-source resolution or a schema-inference job.
+    * Every postings read goes through here; a plan that holds two
+    * probes must give each its own attribute ids
+    * (`LogicalRelation.newInstance`, as [[TextIndexRewrite]] does). */
+  def postingsRelation(spark: SparkSession, dir: String,
+                       stemmed: Boolean = false): DataFrame = {
+    val snap = graft.Tables.snapshotAt(spark, dir)
+    graft.Tables.memo(spark, snap, "postings") {
+      spark.read.schema(if (stemmed) StemmedSchema else PostingsSchema)
+        .parquet(snap.root)
+    }
+  }
 
   /** (term, doc_id, tf, positions) postings over an arbitrary docs
     * frame — one row per distinct (term, doc_id) with the term's
@@ -134,17 +167,20 @@ object TextIndexCatalog {
     *
     * Each build repartitions by term and sorts within partitions —
     * the build parallelizes across the cluster and every term's
-    * postings land contiguously in one file per build, so the probe's
-    * term-equality pushed filter prunes to one partition's row groups
-    * (the bucketed-by-term layout of SURVEY §8.1; delta builds add one
-    * term-partitioned file generation each). Returns the index
-    * directory, the snapshot the refresh compared (callers resolve the
-    * docs relation against it, so a search lists the table once) and
-    * the outcome. */
+    * postings land contiguously in one file per build (the
+    * bucketed-by-term layout of SURVEY §8.1; delta builds add one
+    * term-partitioned file generation each). Files are written in pages
+    * of [[PageRows]] rows, so the probe's pushed term filter skips
+    * every page whose term range misses the keyword. Hash partitioning
+    * gives each file the whole term range, so row-group statistics
+    * alone would prune nothing. Returns the index directory, the
+    * snapshot the refresh compared (callers resolve the docs relation
+    * against it, so a search lists the table once) and the outcome. */
   def refresh(spark: SparkSession, sfDir: String,
               stemmed: Boolean = false): FrameStore.Refreshed = {
     val dir = indexDirFor(graft.Tables.rootOf(sfDir, "documents"), stemmed)
-    val r = FrameStore.refresh(spark, dir, sfDir, "documents") { docs =>
+    val r = FrameStore.refresh(spark, dir, sfDir, "documents",
+        Map("parquet.page.row.count.limit" -> PageRows.toString)) { docs =>
       (if (stemmed) stemmedPostingsOf(docs) else postingsOf(docs))
         .repartition(col("term")).sortWithinPartitions("term")
     }
@@ -601,9 +637,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       bareRegisteredScan(src).flatMap(TextIndexCatalog.lookup) match {
         case None => agg
         case Some(idxPath) =>
-      val probe = spark.read.parquet(idxPath)
-        .filter(col("term").isin(kws: _*))
-        .queryExecution.analyzed
+      val probe = postingsProbe(idxPath)(_.filter(col("term").isin(kws: _*)))
       val pDoc = probe.output.find(_.name == "doc_id").get
       val pTf = probe.output.find(_.name == "tf").get
       // output attribute ids are preserved (doc_id and the score alias),
@@ -628,7 +662,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
         case Some(idxPath) =>
       // document length = SUM(tf) over the FULL postings — the narrow
       // (term, doc_id, tf) columns replace a corpus tokenize
-      val probe = spark.read.parquet(idxPath).queryExecution.analyzed
+      val probe = postingsProbe(idxPath)(identity)
       val pDoc = probe.output.find(_.name == "doc_id").get
       val pTf = probe.output.find(_.name == "tf").get
       val sumTf = org.apache.spark.sql.catalyst.expressions.aggregate
@@ -653,9 +687,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       // keywords (postings are distinct per pair, so the pruned
       // distinct-pair form maps to the same projection): the aggregate
       // disappears, the term set is pushed to the term-bucketed scan
-      val probe = spark.read.parquet(idxPath)
-        .filter(col("term").isin(kws: _*))
-        .queryExecution.analyzed
+      val probe = postingsProbe(idxPath)(_.filter(col("term").isin(kws: _*)))
       val pDoc = probe.output.find(_.name == "doc_id").get
       val pTerm = probe.output.find(_.name == "term").get
       val pTf = probe.output.find(_.name == "tf").get
@@ -686,7 +718,8 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
           // several OR terms yields several matches, which LeftSemi
           // collapses — no distinct needed
           semiJoinOnPostings(child, conjuncts, pred,
-            TextIndexCatalog.lookup(docsPath).get, col("term").isin(kws: _*))
+            TextIndexCatalog.lookup(docsPath).get, stemmed = false,
+            col("term").isin(kws: _*))
         case None =>
           // stemmed scan form against the stemmed-postings registry:
           // terms were stemmed at index time and the keyword-side stem
@@ -703,11 +736,28 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
           stemmedHit match {
             case Some((pred, kw, docsPath)) =>
               semiJoinOnPostings(child, conjuncts, pred,
-                TextIndexCatalog.lookupStemmed(docsPath).get, col("term") === kw)
+                TextIndexCatalog.lookupStemmed(docsPath).get, stemmed = true,
+                col("term") === kw)
             case None => phraseRewrite(f, conjuncts, child)
           }
       }
   }
+
+  /** `shape` over the postings at `idxPath`, analyzed, for insertion
+    * into the plan under rewrite. The relation comes resolved from
+    * [[TextIndexCatalog.postingsRelation]], so a rewrite lists the
+    * index directory and does no data-source resolution; its
+    * attributes are re-instanced (`LogicalRelation.newInstance`) at
+    * every insertion, so two probes in one plan — BM25's dl and tf
+    * folds, or two searches joined — never share attribute ids. */
+  private def postingsProbe(idxPath: String, stemmed: Boolean = false)
+      (shape: DataFrame => DataFrame): LogicalPlan =
+    shape(TextIndexCatalog.postingsRelation(spark, idxPath, stemmed))
+      .queryExecution.analyzed
+      .transformUpWithNewOutput { case r: LogicalRelation =>
+        val fresh = r.newInstance()
+        (fresh, r.output.zip(fresh.output))
+      }
 
   /** The shared tail of the token and stemmed Filter rewrites: replace
     * `pred` (one conjunct of the filter) with a LeftSemi join of the
@@ -717,11 +767,9 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     * the two branches. */
   private def semiJoinOnPostings(child: LogicalPlan,
       conjuncts: Seq[Expression], pred: Expression,
-      idxPath: String,
+      idxPath: String, stemmed: Boolean,
       termFilter: org.apache.spark.sql.Column): LogicalPlan = {
-    val probe = spark.read.parquet(idxPath)
-      .filter(termFilter).select("doc_id")
-      .queryExecution.analyzed
+    val probe = postingsProbe(idxPath, stemmed)(_.filter(termFilter).select("doc_id"))
     val docId = child.output.find(_.name == "doc_id").get
     val idxDocId = probe.output.find(_.name == "doc_id").get
     val rest = conjuncts.filterNot(_ eq pred)
@@ -754,13 +802,12 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
             case Some((pred, terms, loc, docsPath)) =>
               val idxPath = TextIndexCatalog.lookup(docsPath).get
               val distinctTerms = terms.distinct
-              val probe = spark.read.parquet(idxPath)
-                .filter(col("term").isin(distinctTerms: _*))
-                .groupBy("doc_id")
-                .agg(countDistinct(col("term")).as("nt"))
-                .filter(col("nt") === distinctTerms.length)
-                .select("doc_id")
-                .queryExecution.analyzed
+              val probe = postingsProbe(idxPath)(
+                _.filter(col("term").isin(distinctTerms: _*))
+                  .groupBy("doc_id")
+                  .agg(countDistinct(col("term")).as("nt"))
+                  .filter(col("nt") === distinctTerms.length)
+                  .select("doc_id"))
               val docId = child.output.find(_.name == "doc_id").get
               val idxDocId = probe.output.find(_.name == "doc_id").get
               val rest = conjuncts.filterNot(_ eq pred)
