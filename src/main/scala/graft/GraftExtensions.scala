@@ -23,8 +23,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // index rewrite first so it sees the array_contains spelling; it also
-    // matches the locate spelling in case TokenSearchRewrite fired first
+    // index rewrite (token membership over a registered table) first so
+    // it sees the array_contains spelling; it also matches the locate
+    // spelling in case TokenSearchRewrite fired first
     ext.injectOptimizerRule(s => new graft.plans.TextIndexRewrite(s))
     ext.injectOptimizerRule(_ => graft.plans.TokenSearchRewrite)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)

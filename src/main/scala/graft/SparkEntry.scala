@@ -1470,8 +1470,8 @@ object SparkEntry {
         |SELECT d.doc_id, d.lang, d.source, h.score
         |FROM documents d JOIN h ON d.doc_id = h.doc_id
         |ORDER BY h.score DESC, d.doc_id""".stripMargin,
-    // same semantics as art_search_ranked (the ranked-TF index rewrite
-    // must not change results) — the Spark plan aggregates postings tf
+    // same semantics as art_search_ranked (serving from the index must
+    // not change results) — the Spark plan aggregates postings tf
     "art_search_ranked_auto" ->
       """WITH w AS (
         |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
@@ -1710,9 +1710,8 @@ object SparkEntry {
         |SELECT doc_id, lang, source FROM t
         |WHERE list_contains(st, 'merge')
         |ORDER BY doc_id""".stripMargin,
-    // transparent form: the SCAN-form query with the stemmed index
-    // registered — TextIndexRewrite swaps in the postings semi-join, the
-    // observable result (and so the oracle) is the scan form's
+    // index-served form (searchStemmedIndexed): the observable result,
+    // and so the oracle, is the scan form's
     "art_search_stemmed_auto" ->
       """WITH t AS (
         |  SELECT doc_id, lang, source,
@@ -3263,9 +3262,8 @@ object SparkEntry {
         |  UNION ALL SELECT 'rendezvous', n_docs, hrw_moved FROM c)
         |SELECT scheme, n_docs, n_moved, n_moved * 10000 // n_docs AS moved_bp
         |FROM r ORDER BY scheme""".stripMargin,
-    // same semantics as art_search_bm25 (the TRANSPARENT index rewrite
-    // must not change results) — the Spark plan folds both tokenize
-    // subtrees into the postings via DocLenMatch/TermTfMatch
+    // same semantics as art_search_bm25 (serving from the index must
+    // not change results) — the Spark plan is searchBm25Indexed's
     "art_search_bm25_auto" ->
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term

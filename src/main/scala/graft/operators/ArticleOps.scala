@@ -371,10 +371,8 @@ object ArticleOps {
     * the documents; the token explode collapses map-side via partial
     * aggregation. */
   def searchRanked(spark: SparkSession, sfDir: String,
-                   keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
-    rankedOver(docs(spark, sfDir), keywords)
-
-  private def rankedOver(d: DataFrame, keywords: Seq[String]): DataFrame = {
+                   keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
+    val d = docs(spark, sfDir)
     val hits = d
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
       .filter(col("term").isin(keywords.map(_.toLowerCase): _*))
@@ -384,18 +382,22 @@ object ArticleOps {
       .orderBy(col("score").desc, col("doc_id"))
   }
 
-  /** [[searchRanked]] written as the SCAN spelling with the text index
-    * merely REGISTERED — the transparent textScore path: the query
-    * tokenizes and counts keyword occurrences, and
-    * graft.plans.TextIndexRewrite folds the whole explode→filter→count
-    * subtree into `SUM(tf)` over the materialized postings (which store
-    * the per-(term, doc) frequency), so scoring touches only the probed
-    * terms' row groups and the corpus is never tokenized at query time.
-    * Mongo's `$text` contract: indexes are storage, not syntax
-    * (api.py:22,26). A plan spec asserts the Generate is gone. */
+  /** [[searchRanked]] served from the postings — the textScore path:
+    * the postings store tf per (term, doc), so the score is `SUM(tf)`
+    * over the keywords' postings rows, the term set is pushed to the
+    * postings scan, and the corpus is never tokenized at query time.
+    * The postings hold non-empty tokens only, so an empty keyword
+    * scores nothing here. */
   def searchRankedAuto(spark: SparkSession, sfDir: String,
-                       keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
-    rankedOver(indexedDocs(spark, sfDir)._2, keywords)
+                       keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
+    val (idxPath, d) = indexedDocs(spark, sfDir)
+    val hits = TextIndexCatalog.postingsRelation(spark, idxPath)
+      .filter(col("term").isin(keywords.map(_.toLowerCase): _*))
+      .groupBy("doc_id").agg(sum(col("tf")).as("score"))
+    d.join(hits, "doc_id")
+      .select(col("doc_id"), col("lang"), col("source"), col("score"))
+      .orderBy(col("score").desc, col("doc_id"))
+  }
 
   /** Mongo `$text` quoted-phrase search (api.py:26 accepts `"exact
     * phrase"` syntax): docs whose FILTERED token sequence contains the
@@ -511,6 +513,22 @@ object ArticleOps {
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
 
+  /** The BM25 per-(doc, term) part — ONE expression tree shared by the
+    * scan and indexed forms, so their bitwise-equality contract is
+    * structural rather than a convention two copies must uphold.
+    * Inputs are exact integer counts; see [[searchBm25]] for the
+    * no-transcendentals argument. */
+  private[operators] def bm25Part(tf: Column, df: Column, dl: Column,
+                       nDocs: Column, tot: Column): Column =
+    floor(lit(1000000.0) *
+      ((nDocs.cast("double") - df.cast("double") + lit(0.5)) /
+        (df.cast("double") + lit(0.5))) *
+      ((tf.cast("double") * lit(2.2)) /
+        (tf.cast("double") + lit(1.2) * (lit(0.25) + lit(0.75) *
+          (dl.cast("double") /
+            (tot.cast("double") / nDocs.cast("double"))))))
+    ).cast("long")
+
   /** BM25-style ranked search — the tf·idf-shaped upgrade of
     * [[searchRanked]]'s raw TF (Mongo's textScore weighs rarity and
     * length, api.py:26). Per (doc, term):
@@ -526,28 +544,10 @@ object ArticleOps {
     * lengths, one narrow (doc_id, term) agg for tf, a broadcast df
     * table, a broadcast 1-row stats table, and the score join back —
     * the explode collapses map-side everywhere. */
-  /** The BM25 per-(doc, term) part — ONE expression tree shared by the
-    * scan, indexed and transparent forms, so their bitwise-equality
-    * contract is structural rather than a convention three copies must
-    * uphold. Inputs are exact integer counts; see [[searchBm25]] for
-    * the no-transcendentals argument. */
-  private[operators] def bm25Part(tf: Column, df: Column, dl: Column,
-                       nDocs: Column, tot: Column): Column =
-    floor(lit(1000000.0) *
-      ((nDocs.cast("double") - df.cast("double") + lit(0.5)) /
-        (df.cast("double") + lit(0.5))) *
-      ((tf.cast("double") * lit(2.2)) /
-        (tf.cast("double") + lit(1.2) * (lit(0.25) + lit(0.75) *
-          (dl.cast("double") /
-            (tot.cast("double") / nDocs.cast("double"))))))
-    ).cast("long")
-
   def searchBm25(spark: SparkSession, sfDir: String,
-                 keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
-    bm25Over(docs(spark, sfDir), keywords)
-
-  private def bm25Over(d: DataFrame, keywords: Seq[String]): DataFrame = {
+                 keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
+    val d = docs(spark, sfDir)
     val toks = d
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
       .filter(length(col("term")) > 0)
@@ -658,18 +658,10 @@ object ArticleOps {
       .orderBy(col("score").desc, col("doc_id"))
   }
 
-  /** [[searchBm25]] with the index registered — the TRANSPARENT form:
-    * the query is the SAME scan spelling, and TextIndexRewrite folds
-    * both tokenize subtrees into the postings (the dl aggregate becomes
-    * SUM(tf) over the full postings via DocLenMatch; the per-(doc,
-    * term) tf aggregate IS the term-pruned postings row set via
-    * TermTfMatch) — so the whole BM25 evaluation runs off the index
-    * with zero query-time tokenization, the Mongo index-transparent
-    * `$text` scoring contract (api.py:22,26). Results are bitwise equal
-    * to the scan form (same exact-integer inputs, same score tree). */
+  /** [[searchBm25Indexed]]: BM25 served from the postings. */
   def searchBm25Auto(spark: SparkSession, sfDir: String,
                      keywords: Seq[String] = Seq("spark", "merge")): DataFrame =
-    bm25Over(indexedDocs(spark, sfDir)._2, keywords)
+    searchBm25Indexed(spark, sfDir, keywords)
 
   /** [[searchBm25]] served ENTIRELY from the postings index — the
     * "indexes are storage, not syntax" story for the full scoring path.
@@ -788,10 +780,8 @@ object ArticleOps {
     * terms once and this becomes the usual index semi-join. */
   def searchStemmed(spark: SparkSession, sfDir: String,
                     keyword: String = "merges"): DataFrame =
-    stemmedOver(docs(spark, sfDir), keyword)
-
-  private def stemmedOver(d: DataFrame, keyword: String): DataFrame =
-    d.filter(array_contains(
+    docs(spark, sfDir)
+      .filter(array_contains(
         transform(graft.operators.TextOps.words(col("text")),
           t => graft.operators.TextOps.stemToken(t)),
         graft.operators.TextOps.stemToken(lit(keyword.toLowerCase))))
@@ -812,24 +802,11 @@ object ArticleOps {
       .orderBy("doc_id")
   }
 
-  /** [[searchStemmed]] in index form — the 100 TB path its scaladoc
-    * promises: a MATERIALIZED stemmed-postings table (stemming is
-    * row-local, applied once at index time;
-    * TextIndexCatalog.ensureStemmedIndex carries the same incremental
-    * manifest/delta maintenance as the token index), the query keyword
-    * is stemmed once, and the probe is a pushed term equality on the
-    * term-bucketed postings + semi-join back — a plural-insensitive
-    * search touches one term's row groups instead of re-stemming every
-    * document per query. */
-  /** [[searchStemmed]] written as the SCAN form with the stemmed index
-    * merely REGISTERED — the transparent path: TextIndexRewrite
-    * recognizes the stem-lambda predicate (verified structurally against
-    * TextOps.stemToken), swaps in a semi-join against the stemmed
-    * postings, and the query text never mentions the index — Mongo's
-    * `$text` contract, where indexes are storage, not syntax. */
+  /** [[searchStemmedIndexed]]: stemmed search served from the stemmed
+    * postings. */
   def searchStemmedAuto(spark: SparkSession, sfDir: String,
                         keyword: String = "merges"): DataFrame =
-    stemmedOver(indexedDocs(spark, sfDir, stemmed = true)._2, keyword)
+    searchStemmedIndexed(spark, sfDir, keyword)
 
   /** [[searchStemmed]] on the PORTER stemmer — the documented
     * derivational option (VERDICT r5 #8) closing the Mongo `$text`
@@ -875,6 +852,15 @@ object ArticleOps {
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
 
+  /** [[searchStemmed]] in index form — the 100 TB path its scaladoc
+    * promises: a MATERIALIZED stemmed-postings table (stemming is
+    * row-local, applied once at index time;
+    * TextIndexCatalog.ensureStemmedIndex carries the same incremental
+    * manifest/delta maintenance as the token index), the query keyword
+    * is stemmed once, and the probe is a pushed term equality on the
+    * term-bucketed postings + semi-join back — a plural-insensitive
+    * search touches one term's row groups instead of re-stemming every
+    * document per query. */
   def searchStemmedIndexed(spark: SparkSession, sfDir: String,
                            keyword: String = "merges"): DataFrame = {
     val (idxDir, d) = indexedDocs(spark, sfDir, stemmed = true)

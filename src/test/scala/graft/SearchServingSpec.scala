@@ -118,6 +118,32 @@ class SearchServingSpec extends AnyFunSuite {
     TextIndexCatalog.clear()
   }
 
+  test("after an in-place append, scan-form ranked, BM25 and stemmed search read the table, not the indexes built before it") {
+    val sfDir = newStore(Seq((1L, "alpha beta"), (2L, "beta gamma")))
+    TextIndexCatalog.clear()
+    TextIndexCatalog.ensureIndex(spark, sfDir)
+    TextIndexCatalog.ensureStemmedIndex(spark, sfDir)
+    writeDocs(s"$sfDir/documents.parquet", Seq((3L, "zebras run")), "append")
+    // both indexes still cover the two-doc table; every scan form is
+    // planned and run before any index refresh
+    val ranked = ArticleOps.searchRanked(spark, sfDir, Seq("zebras"))
+    val stemmed = ArticleOps.searchStemmed(spark, sfDir, "zebra")
+    val scans = Seq("searchRanked" -> ranked,
+      "searchBm25" -> ArticleOps.searchBm25(spark, sfDir, Seq("zebras")),
+      "searchStemmed" -> stemmed)
+    val failures = scans.flatMap { case (name, df) =>
+      val probes = postingsLeaves(df.queryExecution.optimizedPlan)
+      val got = ids(df)
+      (if (probes.isEmpty) Nil else Seq(s"$name reads ${probes.size} postings probe(s)")) ++
+        (if (got == Seq(3L)) Nil else Seq(s"$name returned $got, not [3]"))
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+    val (rankedRows, stemmedRows) = (ranked.collect().toSeq, stemmed.collect().toSeq)
+    assert(ArticleOps.searchRankedAuto(spark, sfDir, Seq("zebras")).collect().toSeq == rankedRows)
+    assert(ArticleOps.searchStemmedAuto(spark, sfDir, "zebra").collect().toSeq == stemmedRows)
+    TextIndexCatalog.clear()
+  }
+
   test("postingsRelation reads with the schema parquet infers and serves one relation per index version") {
     val sfDir = newStore(Seq((1L, "the merges ran"), (2L, "stories end")))
     TextIndexCatalog.clear()
