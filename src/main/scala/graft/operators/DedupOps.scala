@@ -323,46 +323,39 @@ object DedupOps {
     * SNAPSHOT, not once per session: the table name is NAMESPACED by
     * the corpus path's hash (a derived name an overwrite publish can
     * never collide with a user table under) and its data lives as an
-    * EXTERNAL bucketed table under the frame store with a corpus
-    * fingerprint `_manifest` beside it. A session whose metastore has
-    * never seen the table but whose manifest matches the snapshot
-    * RE-REGISTERS the existing files with the bucket spec
-    * (`CREATE TABLE ... CLUSTERED BY ... LOCATION` — metadata only,
-    * zero rewrite; spec-pinned to keep the one-exchange verify plan);
-    * only a changed corpus republishes. Exactly the production
-    * cadence: the signature table is published beside the snapshot
-    * once, and every cluster/JVM after that mounts it. */
+    * EXTERNAL bucketed table in a [[graft.plans.FrameStore]] store,
+    * committed like every other store (its `_manifest` beside the
+    * bucketed files, under the store's lock). A changed corpus
+    * republishes into the emptied location. A served store that the
+    * session's metastore has never seen is RE-REGISTERED with the bucket
+    * spec (`CREATE TABLE ... CLUSTERED BY ... LOCATION` — metadata
+    * only, zero rewrite; spec-pinned to keep the one-exchange verify
+    * plan). Exactly the production cadence: the signature table is
+    * published beside the snapshot once, and every cluster/JVM after
+    * that mounts it. */
   private[graft] def publishedSignatureTable(spark: SparkSession,
                                              sfDir: String): String = {
+    publishedStore(spark, sfDir)
+    publishedTableName(sfDir)
+  }
+
+  /** The store behind [[publishedSignatureTable]], as the call that
+    * made this session's `dd_published` entry left it. */
+  private[graft] def publishedStore(spark: SparkSession,
+                                    sfDir: String): graft.plans.FrameStore.Refreshed = {
     val snap = Tables.snapshot(spark, sfDir, "documents")
     Tables.memo(spark, snap, "dd_published") {
       val tbl = publishedTableName(sfDir)
-      val locStr = graft.plans.FrameStore.dirFor(publishedStoreKey(sfDir))
-      val loc = new org.apache.hadoop.fs.Path(locStr)
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      val entries = snap.entries
-      val known = spark.catalog.tableExists(tbl)
-      if (graft.plans.FrameStore.readManifest(fs, loc) == entries) {
-        // manifest matches the corpus snapshot: the on-disk bucketed
-        // files are current. A session that already has the catalog
-        // entry serves it AS-IS (r15 — the previous `known ⇒ republish`
-        // branch paid a full overwrite publish once per SparkContext
-        // even when nothing changed, contradicting the "only a changed
-        // corpus republishes" contract); a fresh metastore re-registers
-        // with metadata-only DDL.
-        if (!known) spark.sql(
-          s"""CREATE TABLE $tbl (doc_id BIGINT, sh ARRAY<BIGINT>)
-             |USING parquet CLUSTERED BY (doc_id) SORTED BY (doc_id)
-             |INTO 8 BUCKETS LOCATION '$locStr'""".stripMargin)
-      } else {
-        // a stale external location (changed corpus, or a crash before
-        // the manifest committed) must be cleared before the rewrite
-        if (!known && fs.exists(loc)) fs.delete(loc, true)
-        publishSignatures(spark, sfDir, tbl, overwrite = true,
-          path = Some(locStr))
-        graft.plans.FrameStore.writeManifest(fs, loc, entries)
+      val stored = graft.plans.FrameStore.serveOrBuild(spark,
+          publishedStoreKey(sfDir), sfDir, "documents") { dir =>
+        publishSignatures(spark, sfDir, tbl, overwrite = true, path = Some(dir))
       }
-      tbl
+      if (stored.outcome == graft.plans.FrameStore.Served &&
+          !spark.catalog.tableExists(tbl)) spark.sql(
+        s"""CREATE TABLE $tbl (doc_id BIGINT, sh ARRAY<BIGINT>)
+           |USING parquet CLUSTERED BY (doc_id) SORTED BY (doc_id)
+           |INTO 8 BUCKETS LOCATION '${stored.dir}'""".stripMargin)
+      stored
     }
   }
 

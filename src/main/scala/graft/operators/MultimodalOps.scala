@@ -893,8 +893,8 @@ object MultimodalOps {
     * only — every action still reads the files. */
   private def mediaFiles(spark: SparkSession, sfDir: String, kind: String,
                          glob: String): DataFrame = {
-    val (dir, snap) = mediaZone(spark, sfDir, kind)
-    graft.Tables.memo(spark, snap, s"media:$kind:$glob") {
+    val zone = mediaZone(spark, sfDir, kind)
+    graft.Tables.memo(spark, zone.snapshot, s"media:$kind:$glob") {
       // coalesce to core count (guide §6 small files): binaryFile
       // charges each tiny file the 4 MB open cost, planning ~380 scan
       // tasks for ~6 k files at sf0.1 — per-task launch overhead
@@ -902,7 +902,7 @@ object MultimodalOps {
       // still runs in the scan task) and parameterized by
       // defaultParallelism, never a local constant.
       spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob).load(dir)
+        .option("pathGlobFilter", glob).load(zone.dir)
         .coalesce(spark.sparkContext.defaultParallelism)
     }
   }
@@ -914,55 +914,38 @@ object MultimodalOps {
     * `binaryFile` source. This is the shape of a production multimodal
     * corpus — blobs in an object store, one file per asset — and the
     * write is executor-side (`foreachPartition`: each task lands its
-    * own partition's files; no driver collect). The directory is keyed
-    * by the SHA-1 of the documents table's qualified root
-    * ([[graft.plans.FrameStore.sha1Hex]]; a bare path and a `file:` URI
-    * share one zone) and validated against the table's snapshot entries
-    * (`_source_manifest`) on EVERY call (r14 advice: a
-    * corpus rewritten in place with the same row count must rebuild,
-    * not serve stale payload files). Completion order is files →
-    * `_source_manifest` → `_COMPLETE`, so a partial directory from a
-    * killed run always re-validates as stale and rebuilds. */
+    * own partition's files; no driver collect). The zone is a
+    * [[graft.plans.FrameStore]] store keyed on the documents table's
+    * qualified root and `kind`, validated against the table's snapshot
+    * on EVERY call (a corpus rewritten in place with the same row count
+    * rebuilds, never serves stale payload files). Completion order is
+    * the store commit's: delete the zone, write the files, commit
+    * `_manifest` last, so a zone a killed run left behind has no
+    * manifest and rebuilds. */
   private[graft] def mediaFileDir(spark: SparkSession, sfDir: String, kind: String): String =
-    mediaZone(spark, sfDir, kind)._1
+    mediaZone(spark, sfDir, kind).dir
 
   /** [[mediaFileDir]] with the documents snapshot it was validated
-    * against. */
-  private def mediaZone(spark: SparkSession, sfDir: String,
-                        kind: String): (String, graft.Tables.TableSnapshot) = {
-    import graft.plans.FrameStore
-    val corpusKey = FrameStore.sha1Hex(graft.Tables.rootOf(sfDir, "documents")).take(16)
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_media_${corpusKey}_$kind")
-    // per-zone lock: unrelated zones must not serialize behind one monitor
-    FrameStore.lockFor(base.getAbsolutePath).synchronized {
-      val snap = graft.Tables.snapshot(spark, sfDir, "documents")
-      val entries = snap.entries
-      val basePath = new org.apache.hadoop.fs.Path(base.getAbsolutePath)
-      val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
-      val current = new java.io.File(base, "_COMPLETE").exists() &&
-        FrameStore.readManifest(fs, basePath, "_source_manifest") == entries
-      if (!current) {
-        FrameStore.deleteTree(base)
-        base.mkdirs()
-        val dir = base.getAbsolutePath
-        val (corpus, ext) = kind match {
-          case "png"    => (pngDedupCorpus(spark, sfDir), "png")
-          case "pngmix" => (pngMixedCorpus(spark, sfDir), "png")
-          case _        => (wavDedupCorpus(spark, sfDir), "wav")
-        }
-        corpus.select("doc_id", "payload").foreachPartition {
-          (it: Iterator[org.apache.spark.sql.Row]) =>
-            it.foreach { r =>
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(dir, s"${r.getLong(0)}.$ext"),
-                r.getAs[Array[Byte]](1))
-            }
-        }
-        FrameStore.writeManifest(fs, basePath, entries, "_source_manifest")
-        new java.io.File(base, "_COMPLETE").createNewFile()
+    * against and the store's outcome. */
+  private[graft] def mediaZone(spark: SparkSession, sfDir: String,
+                               kind: String): graft.plans.FrameStore.Refreshed = {
+    val key = s"media#${graft.Tables.rootOf(sfDir, "documents")}#$kind"
+    graft.plans.FrameStore.serveOrBuild(spark, key, sfDir, "documents") { dir =>
+      val (corpus, ext) = kind match {
+        case "png"    => (pngDedupCorpus(spark, sfDir), "png")
+        case "pngmix" => (pngMixedCorpus(spark, sfDir), "png")
+        case _        => (wavDedupCorpus(spark, sfDir), "wav")
       }
-      (base.getAbsolutePath, snap)
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
+      corpus.select("doc_id", "payload").foreachPartition {
+        (it: Iterator[org.apache.spark.sql.Row]) =>
+          it.foreach { r =>
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(dir, s"${r.getLong(0)}.$ext"),
+              r.getAs[Array[Byte]](1))
+          }
+      }
     }
   }
 

@@ -454,8 +454,8 @@ object SimilarityOps {
     graft.Tables.memo(spark, graft.Tables.snapshot(spark, sfDir, "embeddings"),
         s"knn:$k:$tables:$bits") {
       val stored = graft.plans.FrameStore.serveOrBuild(spark,
-        knnStoreKey(sfDir, k, tables, bits), sfDir, "embeddings") {
-        knnGraph(spark, sfDir, k, tables, bits)
+          knnStoreKey(sfDir, k, tables, bits), sfDir, "embeddings") { dir =>
+        knnGraph(spark, sfDir, k, tables, bits).write.parquet(dir)
       }
       spark.read.parquet(stored.dir)
     }

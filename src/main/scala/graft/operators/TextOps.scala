@@ -1720,8 +1720,8 @@ object TextOps {
   private[graft] def lmSurprisalFrame(spark: SparkSession, sfDir: String): DataFrame =
     Tables.memo(spark, Tables.snapshot(spark, sfDir, "documents"), "lm_surprisal") {
       val stored = graft.plans.FrameStore.serveOrBuild(spark,
-        lmStoreKey(sfDir), sfDir, "documents") {
-        lmSurprisalBuild(spark, sfDir)
+          lmStoreKey(sfDir), sfDir, "documents") { dir =>
+        lmSurprisalBuild(spark, sfDir).write.parquet(dir)
       }
       spark.read.parquet(stored.dir)
     }
@@ -1802,34 +1802,6 @@ object TextOps {
       docBigramsOf(docs).groupBy("w1", "w2").agg(sum(col("tf")).as("cnt"))
         .repartition(col("w1"))
     }
-
-  /** LSM COMPACTION for the stats store: merge every partial
-    * generation into one and swap it in — read-side work returns to a
-    * single generation while coverage (the manifest) is unchanged.
-    * Correct by the same merge law the reader applies on every read;
-    * the compacted generation is staged OUTSIDE the live directory and
-    * renamed in (compacting in place would truncate the directory the
-    * merge job is still reading). Spec-gated: counts identical before
-    * and after, and the next [[ensureLmStats]] builds nothing. */
-  private[graft] def compactLmStats(spark: SparkSession, sfDir: String): Unit = {
-    val dir = graft.plans.FrameStore.dirFor(lmStatsKey(sfDir))
-    graft.plans.FrameStore.lockFor(dir).synchronized {
-      import org.apache.hadoop.fs.Path
-      ensureLmStats(spark, sfDir)
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val manifest = graft.plans.FrameStore.readManifest(fs, p)
-      val tmp = new Path(dir + ".compact")
-      spark.read.parquet(dir)
-        .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt"))
-        .repartition(col("w1"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      if (!fs.rename(tmp, p))
-        sys.error(s"compaction swap failed: $tmp -> $p")
-      graft.plans.FrameStore.writeManifest(fs, p, manifest)
-    }
-  }
 
   /** Merged bigram counts off the stats store — one vocabulary-bounded
     * groupBy-sum over however many partial generations the store

@@ -19,20 +19,6 @@ import org.apache.spark.sql.types._
   */
 object EventStreamOps {
 
-  /** events table schema (TESTDATA.md), for readStream sources that
-    * cannot infer it. */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Unbounded file source over a directory of event parquet drops. */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(dir)
-
   /** Tumbling 1-hour windows per type; watermark bounds window state. */
   def tumblingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
     events.withWatermark("ts", watermark)
@@ -59,13 +45,6 @@ object EventStreamOps {
       .groupBy(col("win"))
       .agg(count(lit(1)).as("active_users"))
       .select(col("win.start").as("window_start"), col("active_users"))
-
-  /** Sliding 1-hour/30-minute windows. */
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("n"), col("sum_value"))
 
   /** Per-user session windows, 30-minute inactivity gap. */
   def sessionAggregate(events: DataFrame, watermark: String = "10 minutes",

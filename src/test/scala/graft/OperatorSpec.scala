@@ -212,7 +212,7 @@ class OperatorSpec extends AnyFunSuite {
     graft.plans.TextIndexCatalog.clear()
   }
 
-  test("TextIndexRewrite: stemmed scan form becomes a stemmed-postings semi-join") {
+  test("searchStemmedAuto plans a stemmed-postings semi-join with the stemmed term pushed; a non-stemmer lambda stays a scan") {
     import spark.implicits._
     graft.plans.TextIndexCatalog.clear()
     // scan form with no index registered: the expected rows, and no join
@@ -220,9 +220,8 @@ class OperatorSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSeq
     assert(!ArticleOps.searchStemmed(spark, sf0001)
       .queryExecution.optimizedPlan.toString.contains("LeftSemi"))
-    // searchStemmedAuto registers the stemmed index then plans the SAME
-    // stem-lambda filter — the rule must recognize the lambda as the
-    // S-stemmer (canonicalized comparison) and swap in the index join
+    // searchStemmedAuto builds the stemmed index and semi-joins the docs
+    // with the stemmed postings of the keyword
     val df = ArticleOps.searchStemmedAuto(spark, sf0001)
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("LeftSemi"), s"stemmed index join did not fire:\n$opt")
@@ -232,8 +231,7 @@ class OperatorSpec extends AnyFunSuite {
     val phys = df.queryExecution.executedPlan.toString
     assert(phys.contains("EqualTo(term,merge)"), s"term not pushed:\n$phys")
     assert(df.select("doc_id").as[Long].collect().toSeq == expected)
-    // a DIFFERENT lambda over the same shape must NOT be rewritten
-    // (the rule verifies the stemmer structurally, not just the shape)
+    // a lambda filter over the words is never rewritten by the index rule
     val other = Tables.documents(spark, sf0001)
       .filter(array_contains(
         transform(graft.operators.TextOps.words(col("text")),
@@ -489,7 +487,7 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
-  test("TextIndexRewrite: ranked-TF scan form becomes a postings SUM(tf) aggregation") {
+  test("searchRankedAuto plans a postings SUM(tf) with the terms pushed and no tokenize; same rows as the scan form") {
     import spark.implicits._
     graft.plans.TextIndexCatalog.clear()
     // scan form with no index registered: the expected rows, tokenizing
@@ -499,9 +497,8 @@ class OperatorSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSeq
     assert(scan.queryExecution.optimizedPlan.toString.contains("Generate"),
       "scan form should tokenize via explode")
-    // searchRankedAuto registers the index then plans the SAME
-    // explode→filter→count aggregate — the rule must fold it into a
-    // SUM(tf) over the postings, eliminating query-time tokenization
+    // searchRankedAuto sums tf over the postings of the keywords, so
+    // it never tokenizes at query time
     val df = ArticleOps.searchRankedAuto(spark, sf0001)
     val opt = df.queryExecution.optimizedPlan.toString
     assert(!opt.contains("Generate"), s"explode survived the rewrite:\n$opt")
@@ -516,7 +513,7 @@ class OperatorSpec extends AnyFunSuite {
     graft.plans.TextIndexCatalog.clear()
   }
 
-  test("TextIndexRewrite: the BM25 scan form folds BOTH tokenize subtrees into postings") {
+  test("searchBm25Auto plans both BM25 aggregates over the postings with no tokenize; same rows as the scan form") {
     import spark.implicits._
     graft.plans.TextIndexCatalog.clear()
     val scan = ArticleOps.searchBm25(spark, sf0001)
@@ -524,9 +521,8 @@ class OperatorSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSeq
     assert(scan.queryExecution.optimizedPlan.toString.contains("Generate"),
       "scan form should tokenize via explode")
-    // same scan spelling, index registered: DocLenMatch folds the dl
-    // aggregate to SUM(tf) over the full postings, TermTfMatch replaces
-    // the per-(doc,term) tf aggregate with the term-pruned postings rows
+    // searchBm25Auto reads dl as SUM(tf) over the full postings and the
+    // per-(doc, term) tf as the term-pruned postings rows
     val df = ArticleOps.searchBm25Auto(spark, sf0001)
     val opt = df.queryExecution.optimizedPlan.toString
     assert(!opt.contains("Generate"), s"a tokenize survived the rewrite:\n$opt")
@@ -608,12 +604,11 @@ class OperatorSpec extends AnyFunSuite {
     graft.plans.TextIndexCatalog.clear()
   }
 
-  test("TextIndexRewrite aggregate paths refuse a semantically filtered scan") {
+  test("an index leaves a tokenize aggregate over a filtered scan unchanged") {
     import spark.implicits._
-    // the aggregate rewrites REPLACE their subtree with a postings read;
-    // a predicate between the tokenize and the scan (here lang = 'en')
-    // must refuse the fold — postings cover the WHOLE corpus and would
-    // silently count tokens of filtered-out docs
+    // postings cover the WHOLE corpus, so a tokenize aggregate below a
+    // predicate (here lang = 'en') must keep its own tokenize: a
+    // postings read would count tokens of filtered-out docs
     def q() = graft.Tables.documents(spark, sf0001)
       .filter(col("lang") === "en")
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
@@ -4541,7 +4536,7 @@ class OperatorSpec extends AnyFunSuite {
     TextOps.clearLmCache() // session gone, disk intact
     val second = TextOps.lmSurprisalFrame(spark, sf0001)
     assert(storeDataFiles(key) == built, "post-clear consumer must SERVE, not rewrite")
-    assert(graft.plans.FrameStore.serveOrBuild(spark, key, sf0001, "documents") {
+    assert(graft.plans.FrameStore.serveOrBuild(spark, key, sf0001, "documents") { _ =>
       fail("an unchanged corpus must not rebuild")
     }.outcome == graft.plans.FrameStore.Served)
     assert(second.collect().map(_.toString).sorted.toSeq == rows,
@@ -4581,12 +4576,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(TextOps.ensureLmStats(spark, tmp).outcome.files.size == 2,
       "recompute must cover both files")
     assert(counts() == merged, "merged partials diverged from the recompute")
-    // compaction: generations collapse to one, counts identical, and
-    // the next ensure builds nothing (manifest/coverage unchanged)
-    TextOps.compactLmStats(spark, tmp)
-    assert(counts() == merged, "compaction changed the merged counts")
-    assert(TextOps.ensureLmStats(spark, tmp).outcome.files.isEmpty,
-      "post-compaction ensure must serve, not rebuild")
     // a REWRITTEN file (not append) must force the full-rebuild path
     Seq((1L, "alpha beta"), (2L, "beta"), (3L, "gamma delta alpha"))
       .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(docsDir)
@@ -4605,7 +4594,7 @@ class OperatorSpec extends AnyFunSuite {
     SimilarityOps.clearKnnIndexCache() // session gone, disk intact
     val second = SimilarityOps.knnGraphIndex(spark, sf0001)
     assert(storeDataFiles(key) == built, "post-clear consumer must SERVE, not rewrite")
-    assert(graft.plans.FrameStore.serveOrBuild(spark, key, sf0001, "embeddings") {
+    assert(graft.plans.FrameStore.serveOrBuild(spark, key, sf0001, "embeddings") { _ =>
       fail("an unchanged embeddings table must not rebuild")
     }.outcome == graft.plans.FrameStore.Served)
     assert(second.collect().map(_.toString).sorted.toSeq == rows,

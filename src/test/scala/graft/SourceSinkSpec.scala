@@ -777,10 +777,10 @@ class SourceSinkSpec extends AnyFunSuite {
     assert(rows(MultimodalOps.dhashInflateFilePairs(spark, SparkFixture.sf0001)) ==
       rows(MultimodalOps.dhashInflatePairs(spark, SparkFixture.sf0001)),
       "file-tier inflate pairs diverged from the in-plan tier")
-    // write-once: a second invocation reuses the completed landing
-    // zone (same marker mtime — no re-write of the corpus)
+    // write-once: a second invocation reuses the committed landing
+    // zone (same manifest mtime — no re-write of the corpus)
     val dir = MultimodalOps.mediaFileDir(spark, SparkFixture.sf0001, "png")
-    val marker = new java.io.File(dir, "_COMPLETE")
+    val marker = new java.io.File(dir, "_manifest")
     assert(marker.exists())
     val t0 = marker.lastModified()
     MultimodalOps.dhashPxFilePairs(spark, SparkFixture.sf0001).count()
@@ -805,7 +805,7 @@ class SourceSinkSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "text")
       .coalesce(1).write.mode("overwrite").parquet(docsDir)
     val dir = MultimodalOps.mediaFileDir(spark, tmp, "png")
-    val marker = new java.io.File(dir, "_COMPLETE")
+    val marker = new java.io.File(dir, "_manifest")
     assert(marker.exists())
     val t0 = marker.lastModified()
     // unchanged corpus: served as-is, marker untouched

@@ -96,7 +96,7 @@ class TableSnapshotSpec extends AnyFunSuite {
     assert(DedupOps.publishedSignatureTable(spark, uri) == tbl,
       "the signature table was published twice")
     val zone = MultimodalOps.mediaFileDir(spark, tmp, "png")
-    val marker = new java.io.File(zone, "_COMPLETE")
+    val marker = new java.io.File(zone, "_manifest")
     val t0 = marker.lastModified()
     assert(MultimodalOps.mediaFileDir(spark, uri, "png") == zone && marker.lastModified() == t0,
       "the media zone was written twice")
